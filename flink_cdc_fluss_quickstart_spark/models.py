@@ -52,12 +52,15 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable, _commit_lock
+from flink_cdc_fluss_quickstart_spark.streaming.pk_table import (
+    PKTable,
+    _atomic_write_text,
+    _commit_lock,
+)
 
 _META = "meta.json"
 
@@ -88,20 +91,9 @@ def _table(spark: SparkSession, path: str, keys, order_by,
 
 
 def _write_meta(path: str, meta: dict) -> None:
-    # writer-unique tmp (see PKTable._write_manifest): a shared tmp name
-    # lets two concurrent first-writers rename each other's half-written
-    # file into place; mkstemp keeps the publish swap truly atomic
-    fd, tmp = tempfile.mkstemp(prefix=_META + ".", suffix=".tmp", dir=path)
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f, indent=1, sort_keys=True)
-        os.replace(tmp, os.path.join(path, _META))  # atomic publish
-    except BaseException:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-        raise
+    _atomic_write_text(
+        os.path.join(path, _META), json.dumps(meta, indent=1, sort_keys=True)
+    )
 
 
 def _read_meta(path: str) -> dict:

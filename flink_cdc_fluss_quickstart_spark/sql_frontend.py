@@ -50,7 +50,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from flink_cdc_fluss_quickstart_spark.sources.osb import changelog_stream
-from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable, _commit_lock
+from flink_cdc_fluss_quickstart_spark.streaming.analytics import start_staged_refresh
+from flink_cdc_fluss_quickstart_spark.streaming.cdc_pipeline import replicate
+from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable
 
 # Flink type -> Spark type (SURVEY.md 1.3)
 _TYPE_MAP = {
@@ -867,29 +869,16 @@ class Engine:
             # replication job: stream the changelog, project, merge (K1)
             src = streaming_sources[0]
             path, schema = self.bound_sources[src]
-            stream = changelog_stream(self.spark, path, schema)
             spec = self.tables.get(src)
-            if spec and spec.watermark:
-                col, delay = spec.watermark
-                declared = stream.schema[col].dataType
-                stream = stream.withColumn(col, F.col(col).cast("timestamp")).withWatermark(col, delay)
-                # restore the DDL-declared type so the STORED staging schema
-                # matches the table spec (the watermark itself gates nothing
-                # in a foreachBatch-only pipeline; it is the T1 declaration)
-                stream = stream.withColumn(col, F.col(col).cast(declared))
-            cols = [f.name for f in target_spec.schema.fields]
-            projected = stream.select("op", "seq", *cols)
             ckpt = os.path.join(self.warehouse, "_ckpt", f"{target_name}_from_{src}")
             self._register_ckpt(target_name, ckpt)
-
-            def fb(batch_df: DataFrame, batch_id: int) -> None:
-                target.merge(batch_df, batch_id=batch_id, writer_id=f"sql-{src}")
-
-            q = (
-                projected.writeStream.foreachBatch(fb)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            q = replicate(
+                changelog_stream(self.spark, path, schema),
+                target,
+                ckpt,
+                select_cols=[f.name for f in target_spec.schema.fields],
+                watermark=spec.watermark if spec else None,
+                writer_id=f"sql-{src}",
             )
             self.queries.append(q)
             self.replicated_from[target_name] = src
@@ -992,32 +981,16 @@ class Engine:
                 self.warehouse, "_ckpt", f"view_{target_name}_from_{src}"
             )
             self._register_ckpt(target_name, ckpt)
-            src_key = shape.key_by_table[tbl]
-            store = self.stores[tbl]
-            sync_writer = f"view-sync-{target_name}-{src}"
-            view_writer = f"view-{target_name}-from-{src}"
-
-            def fb(batch_df: DataFrame, batch_id: int, _store=store,
-                   _src_key=src_key, _sync=sync_writer, _writer=view_writer) -> None:
-                from flink_cdc_fluss_quickstart_spark.streaming.analytics import (
-                    affected_keys,
-                    strip_before,
-                )
-
-                batch_df = batch_df.localCheckpoint(eager=True)
-                with _commit_lock(target.path):
-                    _store.merge(strip_before(batch_df), batch_id=batch_id, writer_id=_sync)
-                    view.refresh(
-                        affected_keys(batch_df, _src_key, anchor_key),
-                        batch_id,
-                        _writer,
-                    )
-
-            q = (
-                projected.writeStream.foreachBatch(fb)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            q = start_staged_refresh(
+                projected,
+                ckpt,
+                self.stores[tbl],
+                f"view-sync-{target_name}-{src}",
+                target,
+                view.refresh,
+                shape.key_by_table[tbl],
+                f"view-{target_name}-from-{src}",
+                view_key=anchor_key,
             )
             self.queries.append(q)
 

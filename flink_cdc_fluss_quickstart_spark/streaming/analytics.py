@@ -21,6 +21,8 @@ analytics INSERT at parallelism 1, flink-cdc/docker-compose.yaml:13).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
@@ -170,49 +172,57 @@ class ContinuousRevenueView:
     def start_tickets_pipeline(self, changelog: DataFrame, checkpoint_dir: str,
                                trigger: dict | None = None) -> StreamingQuery:
         """tickets changelog -> staging merge + view refresh (one job)."""
-
-        def fb(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df = batch_df.localCheckpoint(eager=True)
-            # Serialize staging-merge + snapshot-read + serving-merge against
-            # the OTHER side's pipeline (both streams update one serving
-            # table): without this, a refresh computed from a pre-update
-            # movies snapshot could commit AFTER the movie-side refresh that
-            # already saw the edit, leaving a stale title in the view. This
-            # is the micro-batch analogue of Flink serializing both input
-            # streams through one join-operator state.
-            with _commit_lock(self.revenue.path):
-                self.tickets.merge(
-                    strip_before(batch_df), batch_id=batch_id, writer_id="tickets-cdc"
-                )
-                self.refresh(
-                    affected_keys(batch_df, "movie_id"), batch_id, "rev-from-tickets"
-                )
-
-        return (
-            changelog.writeStream.foreachBatch(fb)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(**(trigger or {"availableNow": True}))
-            .start()
+        return start_staged_refresh(
+            changelog, checkpoint_dir, self.tickets, "tickets-cdc",
+            self.revenue, self.refresh, "movie_id", "rev-from-tickets", trigger=trigger,
         )
 
     def start_movies_pipeline(self, changelog: DataFrame, checkpoint_dir: str,
                               trigger: dict | None = None) -> StreamingQuery:
         """movies changelog -> staging merge + view refresh, so dimension-side
         updates (title edits) rewrite previously-emitted groups (J1)."""
-
-        def fb(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df = batch_df.localCheckpoint(eager=True)
-            with _commit_lock(self.revenue.path):  # see start_tickets_pipeline
-                self.movies.merge(
-                    strip_before(batch_df), batch_id=batch_id, writer_id="movies-cdc"
-                )
-                self.refresh(
-                    affected_keys(batch_df, "movie_id"), batch_id, "rev-from-movies"
-                )
-
-        return (
-            changelog.writeStream.foreachBatch(fb)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(**(trigger or {"availableNow": True}))
-            .start()
+        return start_staged_refresh(
+            changelog, checkpoint_dir, self.movies, "movies-cdc",
+            self.revenue, self.refresh, "movie_id", "rev-from-movies", trigger=trigger,
         )
+
+
+def start_staged_refresh(
+    changelog: DataFrame,
+    checkpoint_dir: str,
+    staging: PKTable,
+    staging_writer: str,
+    serving: PKTable,
+    refresh: Callable[[DataFrame, int, str], None],
+    key: str,
+    view_writer: str,
+    view_key: str | None = None,
+    trigger: dict | None = None,
+) -> StreamingQuery:
+    """One changelog -> staging table -> view pipeline. Each micro-batch
+    merges into ``staging`` (idempotent under ``staging_writer``), then
+    ``refresh(affected, batch_id, view_writer)`` recomputes exactly the
+    group keys the batch touched: ``key`` of the after- and before-images,
+    renamed to ``view_key``."""
+
+    def fb(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = batch_df.localCheckpoint(eager=True)
+        # Serialize staging-merge + snapshot-read + serving-merge against
+        # the OTHER upstream pipeline of the same view (both streams update
+        # one serving table): without this, a refresh computed from a
+        # pre-update dimension snapshot could commit AFTER the dimension-
+        # side refresh that already saw the edit, leaving a stale title in
+        # the view. This is the micro-batch analogue of Flink serializing
+        # both input streams through one join-operator state.
+        with _commit_lock(serving.path):
+            staging.merge(
+                strip_before(batch_df), batch_id=batch_id, writer_id=staging_writer
+            )
+            refresh(affected_keys(batch_df, key, view_key), batch_id, view_writer)
+
+    return (
+        changelog.writeStream.foreachBatch(fb)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )

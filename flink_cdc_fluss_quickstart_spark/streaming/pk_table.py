@@ -31,23 +31,24 @@ semantics ride the same manifest:
   contract enforced, not just documented (production: Delta/Iceberg
   optimistic-commit conflicts).
 
-**Delta ingest (the LSM half of the Paimon analogue).** `merge()` folds
-each affected bucket by reading and rewriting it -- correct, but a
-uniformly-hashed batch touches every bucket, so merge cost is O(table)
-per batch at any bucket count (measured r13: ingesting a fixed 500-doc
-band batch into a 1.2M-row index cost exactly a full rebuild). Paimon's
-answer is an LSM tree INSIDE each bucket: ingests append level-0 delta
-files, reads merge-on-read, compaction folds periodically. `ingest()` is
-that path here: the batch is written as new per-bucket DELTA files (cost
-O(|batch|), nothing existing read or rewritten), registered in the same
-manifest under composite pointer keys (`"<bucket>#d<version>"` -- so
-time travel, history replay, GC grace, fencing and txn idempotence all
-ride the existing machinery unchanged), and `snapshot()` resolves
-base+deltas with a latest-per-key merge-on-read keyed by commit version.
-`compact()` (auto-triggered past `compact_threshold` deltas per bucket)
-folds deltas back into the base -- amortizing the rewrite over many
-ingests instead of paying it on every one. Tables never ingested into
-have no composite keys and keep the exact pre-delta read path.
+Two write paths share one bucket layout. `merge()` folds each touched
+bucket (read + rewrite); `ingest()` appends per-bucket DELTA files at
+O(|batch|) cost (Paimon's in-bucket LSM), registered under composite
+pointer keys ``"<bucket>#d<version>"``; `compact()` folds deltas back into
+the base.
+
+**Commit protocol** (every writer, under the per-path commit lock): fence
+the writer epoch, write ``v<version>/__bucket=<b>/`` in one co-located
+partitioned job (`_write_buckets`), then `_commit`: swap the bucket
+pointers, set version and txn watermark, record the undo history, queue
+the superseded dirs for GC, re-check the fence and swap the manifest, and
+only then delete dirs whose GC grace expired.
+
+**Read resolution**: `_state_at` rebuilds the pointer map (and bucket
+count) at a version, `_dirs` selects its live base and delta dirs --
+optionally only some buckets -- and raises for a GC-expired version, and
+`_resolve_dirs` scans them: the plain base scan without deltas, else a
+latest-per-key merge-on-read keyed by commit version.
 """
 
 from __future__ import annotations
@@ -58,6 +59,7 @@ import shutil
 import tempfile
 import threading
 import time
+from collections import Counter
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
@@ -105,7 +107,8 @@ GC_GRACE_SECS = 300.0
 # manifest could interleave and lose bucket pointers / txn markers. All
 # writers in this process serialize commits per table path; a multi-driver
 # production deployment maps this onto the table format's own transaction
-# protocol (Delta/Iceberg optimistic commit).
+# protocol (Delta/Iceberg optimistic commit). Reentrant: merge() and
+# ingest() call compact() while holding it.
 _COMMIT_LOCKS: dict[str, threading.RLock] = {}
 _COMMIT_LOCKS_GUARD = threading.Lock()
 
@@ -116,15 +119,41 @@ def _commit_lock(path: str) -> threading.RLock:
         return _COMMIT_LOCKS.setdefault(key, threading.RLock())
 
 
+def _atomic_write_text(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` atomically. The tmp file is
+    writer-unique (mkstemp in the same dir): a shared tmp name lets two
+    processes writing the same file concurrently rename each other's
+    half-written file into place (a torn file every reader then crashes
+    on) or crash on the vanished tmp. os.replace makes the swap
+    last-writer-wins atomic with no shared intermediate."""
+    d, name = os.path.split(path)
+    fd, tmp = tempfile.mkstemp(prefix=name + ".", suffix=".tmp", dir=d)
+    try:
+        with os.fdopen(fd, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
+    except BaseException:
+        try:
+            os.unlink(tmp)
+        except OSError:
+            pass
+        raise
+
+
 def _bucket_expr(keys: Sequence[str], n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
+
+
+def _bucket_of(pointer_key: str) -> int:
+    """Bucket id of a manifest pointer key (``"3"`` or delta ``"3#d7"``)."""
+    return int(pointer_key.split("#", 1)[0])
 
 
 # on-disk (compressed) pending-delta bytes up to which the merge-on-read
 # anti join broadcasts its distinct delta-key side; above it the join pins
 # sort-merge. Sized well under the session's 64m autoBroadcastJoinThreshold:
 # the key projection of 32 MiB of columnar delta decompresses toward the
-# threshold, never past the r15 audit's observed 2x overshoot regime.
+# threshold, never past the observed 2x-overshoot regime.
 DELTA_BROADCAST_MAX_BYTES = 32 * 1024 * 1024
 
 
@@ -134,11 +163,10 @@ def _bucket_colocate(df: DataFrame, n_partitions: int) -> DataFrame:
     bucketed-sink shape: writer parallelism is bounded by the bucket
     count, by design). Without it, ``partitionBy('__bucket')`` has every
     upstream partition write its own sliver into every bucket dir -- up
-    to shuffle-partitions files PER BUCKET per commit. The r15
-    point-serve audit measured the consequence: an 8-key lookup against
-    a 64-bucket table opened 256 files and barely beat a full-scan
-    filter; with one file per bucket it opens <= 8. Per-bucket FILE
-    count, not bucket count, dominates point-read open cost. The shuffle
+    to shuffle-partitions files PER BUCKET per commit, and per-bucket FILE
+    count, not bucket count, dominates point-read open cost (an 8-key
+    lookup against a 64-bucket table opened 256 files and barely beat a
+    full-scan filter; with one file per bucket it opens <= 8). The shuffle
     this adds moves only the rows being rewritten (bucket-bounded for
     merge/compact; the full set for overwrite/rescale, which are
     table-sized rewrites anyway), and parquet/orc row groups keep the
@@ -168,8 +196,7 @@ class PKTable:
     columns; the resolved snapshot holds payload columns only (latest row
     per key, deletes absent). merge folds affected buckets eagerly
     (O(bucket) per touched bucket); ingest appends per-bucket delta files
-    (O(|batch|), merge-on-read, compaction amortizes the fold) -- see the
-    module docstring's delta-ingest section for when each pays off.
+    (O(|batch|), merge-on-read, compaction amortizes the fold).
     Reads: ``snapshot()`` (full table / time travel) and ``lookup(probe)``
     (bucket-pruned point read of the probed keys -- the Fluss PK-table
     serving shape its 'bucket.num' exists for). Maintenance: ``compact()``
@@ -212,11 +239,9 @@ class PKTable:
             # with a different ctor value must not re-route keys -- a merge
             # would rewrite only the new-numbered bucket and the key's old
             # row survives in the old one (duplicate PKs with no error) --
-            # or misread existing files. Adopt the stored values.
-            stored = self._read_manifest()
-            if stored.get("n_buckets") is not None:
-                self.n_buckets = stored["n_buckets"]
-            self.data_format = stored.get("format", "parquet")
+            # or misread existing files. Adopt the stored values
+            # (_read_manifest adopts the bucket count).
+            self.data_format = self._read_manifest().get("format", "parquet")
 
     # -- manifest ---------------------------------------------------------
 
@@ -239,7 +264,7 @@ class PKTable:
         return m
 
     def _write_manifest(self, m: dict) -> None:
-        # last line of defense for the writer fence (T4): the commit-entry
+        # last line of defense for the writer fence: the commit-entry
         # _fence() check can be seconds stale by the time the Spark write job
         # finishes, and last-writer-wins os.replace would clobber a rival
         # engine's committed manifest. Re-checking here shrinks the lost-
@@ -253,27 +278,9 @@ class PKTable:
                 " another engine claimed this table mid-write; aborting"
                 " before the manifest swap"
             )
-        # WRITER-UNIQUE tmp file (r15 fence-race find): a shared '.tmp'
-        # name lets two processes creating the same table concurrently
-        # rename each other's half-written file into place (a torn
-        # manifest every reader then crashes on) or crash on the vanished
-        # tmp. mkstemp + os.replace makes the swap last-writer-wins atomic
-        # with no shared intermediate. In-grace commits still serialize
-        # under the commit lock / writer fence; this protects the one
-        # unfenced write -- first-open manifest creation.
-        fd, tmp = tempfile.mkstemp(
-            prefix=MANIFEST + ".", suffix=".tmp", dir=self.path
-        )
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(m, f, indent=1)
-            os.replace(tmp, self._manifest_path)  # atomic snapshot swap
-        except BaseException:
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
-            raise
+        # the atomic swap also protects the one unfenced write -- two
+        # processes creating the same table concurrently on first open
+        _atomic_write_text(self._manifest_path, json.dumps(m, indent=1))
 
     # -- writer-epoch fence -------------------------------------------------
 
@@ -312,10 +319,9 @@ class PKTable:
             # Deliberately NO cleanup of older markers: unlinking a smaller
             # epoch re-opens it for O_EXCL creation, so a lagging claimer
             # could re-claim an epoch another process already holds
-            # (found by tests/test_pk_table_fence.py's 8-process race --
-            # duplicates stayed SAFE, since a duplicated epoch can never be
+            # (duplicates stay SAFE, since a duplicated epoch can never be
             # the max and both holders fail the staleness check, but epoch
-            # numbers lost uniqueness as writer identities). Markers
+            # numbers would lose uniqueness as writer identities). Markers
             # accumulate one tiny file per ENGINE CLAIM (a rare handoff
             # event, not per commit), so the dir stays small forever.
             return
@@ -339,37 +345,8 @@ class PKTable:
         a pruned/expired version raises instead of returning a wrong state,
         exactly Iceberg's expire_snapshots contract.
         """
-        m = self._read_manifest()
-        if version is None:
-            buckets = m["buckets"]
-        else:
-            buckets = self._buckets_at(m, version)
-        dirs = [os.path.join(self.path, d) for d in buckets.values()]
-        if version is not None:
-            gone = [d for d in dirs if not os.path.exists(d)]
-            if gone:
-                raise ValueError(
-                    f"snapshot v{version} expired: data dirs {gone} were"
-                    " garbage-collected (raise gc_grace_secs to retain"
-                    " longer time-travel windows)"
-                )
-        base_dirs = [
-            os.path.join(self.path, d)
-            for k, d in buckets.items() if "#" not in k
-        ]
-        delta_dirs = [
-            os.path.join(self.path, d)
-            for k, d in buckets.items() if "#" in k
-        ]
-        base_dirs = [d for d in base_dirs if os.path.exists(d)]
-        delta_dirs = [d for d in delta_dirs if os.path.exists(d)]
-        if not delta_dirs:
-            # pre-delta fast path: pure pruned scan, byte-identical to the
-            # behavior every table had before ingest() existed
-            if not base_dirs:
-                return None
-            return self.spark.read.format(self.data_format).load(base_dirs)
-        return self._resolve_dirs(base_dirs, delta_dirs)
+        buckets, _ = self._state_at(self._read_manifest(), version)
+        return self._resolve_dirs(*self._dirs(buckets, version))
 
     def lookup(self, probe: DataFrame, version: int | None = None) -> DataFrame | None:
         """Bucket-pruned point read -- the Fluss PK-table lookup serving
@@ -385,29 +362,25 @@ class PKTable:
         point read and a table scan -- and nothing table-sized shuffles
         (the delta fold is the anti/union resolve). Missing keys have no
         row; keys whose latest delta is a delete resolve to absent.
-        ``version`` time-travels like snapshot().
+        ``version`` time-travels like snapshot(), hashing the probe with
+        the bucket count in effect at that version.
 
         "No rows" is always a zero-row DataFrame in the table's schema --
         whether the probed keys are absent from live buckets or hash only
         into empty ones. None is returned ONLY when the table itself has
         no data dirs at all (nothing to source a schema from), matching
         snapshot()'s empty-table contract."""
-        m = self._read_manifest()
-        if version is None:
-            buckets, nb = m["buckets"], self.n_buckets
-        else:
-            # a read at a pre-rescale version must hash the probe with the
-            # bucket count IN EFFECT at that version -- the current count
-            # would route keys to buckets that did not exist then
-            buckets = self._buckets_at(m, version)
-            nb = self._n_buckets_at(m, version)
+        buckets, nb = self._state_at(self._read_manifest(), version)
         # xxhash64 is TYPE-sensitive (hash(1 int) != hash(1 bigint)), so a
         # probe whose key columns arrive in a different-but-compatible type
         # would hash into the WRONG buckets and silently miss every row:
         # align the probe to the stored key types first (one footer read).
         schema_src = self._empty_frame(buckets)
         if schema_src is None:
-            return None  # table has no data dirs at all: nothing to serve
+            # no live data dir: an empty table has nothing to serve, and a
+            # version whose dirs were all garbage-collected raises here
+            self._dirs(buckets, version)
+            return None
         stored = {f.name: f.dataType for f in schema_src.schema.fields}
         # pin the probe key set before collecting the bucket ids: the same
         # materialized keys must feed BOTH the pruning collect and the semi
@@ -429,33 +402,9 @@ class PKTable:
                 _bucket_expr(self.keys, nb).alias("__b")
             ).distinct().collect()
         }
-        sel = {
-            k: d for k, d in buckets.items()
-            if int(k.split("#", 1)[0]) in wanted
-        }
-        dirs = [os.path.join(self.path, d) for d in sel.values()]
-        if version is not None:
-            gone = [d for d in dirs if not os.path.exists(d)]
-            if gone:
-                raise ValueError(
-                    f"snapshot v{version} expired: data dirs {gone} were"
-                    " garbage-collected (raise gc_grace_secs to retain"
-                    " longer time-travel windows)"
-                )
-        base_dirs = [
-            os.path.join(self.path, d) for k, d in sel.items() if "#" not in k
-        ]
-        delta_dirs = [
-            os.path.join(self.path, d) for k, d in sel.items() if "#" in k
-        ]
-        base_dirs = [d for d in base_dirs if os.path.exists(d)]
-        delta_dirs = [d for d in delta_dirs if os.path.exists(d)]
-        if not base_dirs and not delta_dirs:
+        resolved = self._resolve_dirs(*self._dirs(buckets, version, wanted))
+        if resolved is None:
             return schema_src  # every probed bucket empty: zero rows
-        if not delta_dirs:
-            resolved = self.spark.read.format(self.data_format).load(base_dirs)
-        else:
-            resolved = self._resolve_dirs(base_dirs, delta_dirs)
         # the semi join reorders the key columns first; serve the stored
         # column order so both "no rows" shapes and the hit path agree
         return resolved.join(keysel, list(self.keys), "left_semi").select(
@@ -470,18 +419,84 @@ class PKTable:
         for k, d in sorted(buckets.items(), key=lambda kv: "#" in kv[0]):
             p = os.path.join(self.path, d)
             if os.path.exists(p):
-                df = self.spark.read.format(self.data_format).load(p).limit(0)
+                df = self._load(p).limit(0)
                 return df.drop("__op", "__dv") if "#" in k else df
         return None
+
+    def _load(self, dirs: str | list[str]) -> DataFrame:
+        return self.spark.read.format(self.data_format).load(dirs)
+
+    def _state_at(self, m: dict, version: int | None) -> tuple[dict[str, str], int]:
+        """The bucket-pointer map and the bucket count as of manifest
+        ``version`` (None = current): one backwards walk over the commit
+        history from the current state, undoing each later commit's
+        recorded pointer deltas and, for a rescale commit (the only kind
+        that records ``nb``), its PRE-rescale bucket count."""
+        if version is None:
+            return m["buckets"], self.n_buckets
+        if version > m["version"] or version < 0:
+            raise ValueError(
+                f"unknown version {version} (current is {m['version']})"
+            )
+        # a legacy manifest (written before commit history existed) can
+        # reconstruct NO earlier version; treating its missing floor as 0
+        # would silently return the current bucket map labeled as version N.
+        # Expired reads must raise, never mis-answer.
+        floor = m.get(
+            "history_floor", m["version"] if "history" not in m else 0
+        )
+        if version < floor:
+            raise ValueError(
+                f"snapshot v{version} expired: history retained back to"
+                f" v{floor} only (HISTORY_KEEP commits)"
+            )
+        buckets = dict(m["buckets"])
+        nb = m.get("n_buckets", self.n_buckets)
+        for e in sorted(m.get("history", []), key=lambda e: -e["v"]):
+            if e["v"] <= version:
+                break
+            for b, old in e["changed"].items():
+                if old is None:
+                    buckets.pop(b, None)
+                else:
+                    buckets[b] = old
+            if e.get("nb") is not None:
+                nb = e["nb"]
+        return buckets, nb
+
+    def _dirs(self, buckets: dict[str, str], version: int | None = None,
+              wanted: set[int] | None = None) -> tuple[list[str], list[str]]:
+        """The live base and delta dirs of ``buckets`` (only bucket ids in
+        ``wanted`` when given). A versioned read whose dirs were
+        garbage-collected raises: the state it names is gone, and
+        resolving the survivors would mis-answer. The current state skips
+        a dir that vanished under a concurrent commit's GC."""
+        sel = {
+            k: os.path.join(self.path, d) for k, d in buckets.items()
+            if wanted is None or _bucket_of(k) in wanted
+        }
+        gone = [d for d in sel.values() if not os.path.exists(d)]
+        if version is not None and gone:
+            raise ValueError(
+                f"snapshot v{version} expired: data dirs {gone} were"
+                " garbage-collected (raise gc_grace_secs to retain"
+                " longer time-travel windows)"
+            )
+        live = {k: d for k, d in sel.items() if d not in gone}
+        return (
+            [d for k, d in live.items() if "#" not in k],
+            [d for k, d in live.items() if "#" in k],
+        )
 
     def _resolve_dirs(
         self, base_dirs: list[str], delta_dirs: list[str]
     ) -> DataFrame | None:
-        """Merge-on-read over base + delta files: latest row per key by
-        commit version (delta files carry their commit version in the
-        stored `__dv` column; base rows are version 0 by construction --
-        every delta postdates the base fold that preceded it), then drop
-        delete markers.
+        """Merge-on-read over base + delta files (None when both are
+        empty; the plain base scan when there are no deltas): latest row
+        per key by commit version (delta files carry their commit version
+        in the stored `__dv` column; base rows are version 0 by
+        construction -- every delta postdates the base fold that preceded
+        it), then drop delete markers.
 
         Shuffle discipline (the 100 TB shape of this read): base rows are
         unique per key AND always lose last-writer resolution to any delta
@@ -493,19 +508,13 @@ class PKTable:
         -- ONE pruned scan of the base streaming through an anti join
         (broadcast when the delta key set is small, the daily-ingest case)
         and a window over the delta rows alone. Nothing table-sized is
-        ever shuffled or windowed at any delta depth; the pre-r14 plan
-        folded the whole base through the latest-by-key window, a
-        full-table shuffle per snapshot read (A/B in SCALE.md)."""
-        base = (
-            self.spark.read.format(self.data_format).load(base_dirs)
-            if base_dirs else None
-        )
-        deltas = (
-            self.spark.read.format(self.data_format).load(delta_dirs)
-            if delta_dirs else None
-        )
-        if deltas is None:
+        ever shuffled or windowed at any delta depth (folding the whole
+        base through the latest-by-key window would be a full-table
+        shuffle per snapshot read; A/B in SCALE.md)."""
+        base = self._load(base_dirs) if base_dirs else None
+        if not delta_dirs:
             return base
+        deltas = self._load(delta_dirs)
         resolved = (
             latest_by_key(deltas, self.keys, ["__dv"])
             .filter(F.col("__op") != OP_DELETE)
@@ -514,9 +523,9 @@ class PKTable:
         if base is None:
             return resolved
         dkeys = deltas.select(*self.keys).distinct()
-        # join-strategy pin, gated on the TRUE on-disk delta size (r15
-        # audit, tools/audit_delta_read.py --wide): the distinct delta-key
-        # frame is an aggregate over a pruned scan -- the static estimate
+        # join-strategy pin, gated on the TRUE on-disk delta size
+        # (tools/audit_delta_read.py --wide): the distinct delta-key frame
+        # is an aggregate over a pruned scan -- the static estimate
         # undershoots so badly that the planner (and even the AQE-final
         # plan) broadcast a 16M-key build side at 2x the 64m threshold.
         # Daily-ingest deltas broadcast (the designed-for case: no exchange
@@ -558,51 +567,6 @@ class PKTable:
             " query by VERSION AS OF instead"
         )
 
-    def _buckets_at(self, m: dict, version: int) -> dict[str, str]:
-        """Reconstruct the bucket-pointer map as of manifest `version` by
-        walking the commit history backwards from the current map, undoing
-        each later commit's recorded deltas."""
-        if version > m["version"] or version < 0:
-            raise ValueError(
-                f"unknown version {version} (current is {m['version']})"
-            )
-        # a legacy manifest (written before commit history existed) can
-        # reconstruct NO earlier version; treating its missing floor as 0
-        # would silently return the current bucket map labeled as version N.
-        # Expired reads must raise, never mis-answer.
-        floor = m.get(
-            "history_floor", m["version"] if "history" not in m else 0
-        )
-        if version < floor:
-            raise ValueError(
-                f"snapshot v{version} expired: history retained back to"
-                f" v{floor} only (HISTORY_KEEP commits)"
-            )
-        buckets = dict(m["buckets"])
-        for e in sorted(m.get("history", []), key=lambda e: -e["v"]):
-            if e["v"] <= version:
-                break
-            for b, old in e["changed"].items():
-                if old is None:
-                    buckets.pop(b, None)
-                else:
-                    buckets[b] = old
-        return buckets
-
-    def _n_buckets_at(self, m: dict, version: int) -> int:
-        """The bucket count in effect at manifest ``version`` -- the same
-        backwards history walk as _buckets_at, undoing each later rescale
-        commit (the only commit kind that records an ``nb`` field: the
-        PRE-rescale count). Bounds/floor checks ride on _buckets_at, which
-        every caller runs first."""
-        nb = m.get("n_buckets", self.n_buckets)
-        for e in sorted(m.get("history", []), key=lambda e: -e["v"]):
-            if e["v"] <= version:
-                break
-            if e.get("nb") is not None:
-                nb = e["nb"]
-        return nb
-
     def snapshot_at_batch(self, writer_id: str, batch_id: int) -> DataFrame | None:
         """Read-at-batch: the table state right after `writer_id` committed
         `batch_id` (the newest data commit from that writer at or below the
@@ -621,8 +585,60 @@ class PKTable:
             )
         return self.snapshot(version=max(versions))
 
+    def last_batch_id(self, writer_id: str) -> int:
+        return self._read_manifest()["txn"].get(writer_id, -1)
+
+    # -- commit protocol ----------------------------------------------------
+
+    def _write_buckets(self, df: DataFrame | None, version: int,
+                       n_buckets: int, n_partitions: int) -> dict[str, str]:
+        """The one bucketed write: tag ``df`` with its bucket, co-locate
+        each bucket in one task (see _bucket_colocate) and write
+        ``v<version>/`` partitioned by bucket in ONE job. Returns the bucket
+        dirs the write actually produced ({bucket id: dir relative to the
+        table}); a bucket whose rows were all deleted gets no dir, and a
+        None ``df`` writes nothing."""
+        if df is None:
+            return {}
+        vdir = f"v{version}"
+        out = os.path.join(self.path, vdir)
+        df = _bucket_colocate(
+            df.withColumn("__bucket", _bucket_expr(self.keys, n_buckets)),
+            n_partitions,
+        )
+        df.write.partitionBy("__bucket").mode("overwrite").format(
+            self.data_format
+        ).save(out)
+        return {
+            n.split("=", 1)[1]: os.path.join(vdir, n)
+            for n in sorted(os.listdir(out)) if n.startswith("__bucket=")
+        }
+
+    def _commit(self, m: dict, version: int, drop: Sequence[str],
+                new: dict[str, str], writer_id: str | None = None,
+                batch_id: int | None = None, nb: int | None = None) -> None:
+        """The commit tail every writer shares: repoint the manifest
+        (remove pointer keys ``drop``, add ``new``), set version and the
+        writer's txn watermark, record the undo history, queue the
+        superseded dirs for GC, swap the manifest (re-checking the fence)
+        and only then delete dirs whose GC grace expired -- a crash can
+        only under-delete."""
+        buckets = m["buckets"]
+        changed = {k: buckets.get(k) for k in dict.fromkeys([*drop, *new])}
+        superseded = [buckets.pop(k) for k in drop if k in buckets]
+        buckets.update(new)
+        m["version"] = version
+        if writer_id is not None:
+            m["txn"][writer_id] = batch_id
+        self._record_commit(m, version, writer_id, batch_id, changed, nb)
+        expired = self._queue_gc(m, superseded)
+        self._write_manifest(m)
+        for d in expired:
+            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+
     def _record_commit(self, m: dict, version: int, writer_id: str | None,
-                       batch_id: int | None, changed: dict) -> None:
+                       batch_id: int | None, changed: dict,
+                       nb: int | None = None) -> None:
         # first commit over a legacy (pre-history) manifest: versions below
         # the previous one are unreconstructable -- pin the floor there so
         # they raise as expired instead of walking a partial history
@@ -637,10 +653,13 @@ class PKTable:
         ts = time.time()
         if hist and hist[-1].get("ts") is not None:
             ts = max(ts, hist[-1]["ts"])
-        hist.append(
-            {"v": version, "writer": writer_id, "batch": batch_id,
-             "changed": changed, "ts": ts}
-        )
+        entry = {"v": version, "writer": writer_id, "batch": batch_id,
+                 "changed": changed, "ts": ts}
+        if nb is not None:
+            # undo info for _state_at: reads at versions BEFORE a rescale
+            # commit hash with the pre-rescale count
+            entry["nb"] = nb
+        hist.append(entry)
         if len(hist) > HISTORY_KEEP:
             dropped = hist[: len(hist) - HISTORY_KEEP]
             hist = hist[len(hist) - HISTORY_KEEP:]
@@ -649,8 +668,50 @@ class PKTable:
             )
         m["history"] = hist
 
-    def last_batch_id(self, writer_id: str) -> int:
-        return self._read_manifest()["txn"].get(writer_id, -1)
+    def _queue_gc(self, m: dict, superseded: Sequence[str]) -> list[str]:
+        """Age-based GC: newly superseded dirs enter the manifest's `gc`
+        ledger; entries older than `gc_grace_secs` are returned for removal
+        (after the manifest swap, so a crash can only under-delete)."""
+        now = time.time()
+        pending = m.get("gc", []) + [{"dir": d, "ts": now} for d in superseded]
+        keep: list[dict] = []
+        expired: list[str] = []
+        for e in pending:
+            if now - e["ts"] >= self.gc_grace_secs:
+                expired.append(e["dir"])
+            else:
+                keep.append(e)
+        m["gc"] = keep
+        return expired
+
+    def _stage_batch(self, changes: DataFrame, batch_id: int | None,
+                     writer_id: str) -> tuple[dict, int, DataFrame, list[int]] | None:
+        """The merge/ingest preamble, run under the commit lock: fence,
+        resolve the batch id, and return None for a replayed batch (the
+        txn watermark is checked FIRST, so a replay commits nothing). The
+        batch collapses to its latest row per key, is tagged with its
+        bucket and pinned (the source micro-batch is transient), and its
+        touched bucket ids are collected -- one int per DISTINCT bucket,
+        metadata-sized by construction. A batch touching no bucket only
+        advances the txn watermark (no version) and returns None."""
+        self._fence()
+        m = self._read_manifest()
+        last = m["txn"].get(writer_id, -1)
+        if batch_id is None:
+            batch_id = last + 1
+        if last >= batch_id:
+            return None
+        batch = latest_by_key(changes, self.keys, self.order_by).withColumn(
+            "__bucket", _bucket_expr(self.keys, self.n_buckets)
+        ).localCheckpoint(eager=True)
+        affected = [
+            r["__bucket"] for r in batch.select("__bucket").distinct().collect()
+        ]
+        if not affected:
+            m["txn"][writer_id] = batch_id
+            self._write_manifest(m)
+            return None
+        return m, batch_id, batch, affected
 
     # -- write ------------------------------------------------------------
 
@@ -670,105 +731,40 @@ class PKTable:
         manifest updates.
         """
         with _commit_lock(self.path):
-            self._merge_locked(changes, batch_id, writer_id, op_col)
-
-    def _merge_locked(self, changes: DataFrame, batch_id: int | None,
-                      writer_id: str, op_col: str) -> None:
-        self._fence()
-        m = self._read_manifest()
-        if any("#" in k for k in m["buckets"]):
-            # pending delta files: fold them first so the bucket rewrite
-            # below sees every committed row (merge reads base dirs only)
-            self._compact_locked()
-            m = self._read_manifest()
-        if batch_id is None:
-            batch_id = m["txn"].get(writer_id, -1) + 1
-        if m["txn"].get(writer_id, -1) >= batch_id:
-            return
-
-        # collapse the batch itself first (a batch may touch a key twice)
-        batch_latest = latest_by_key(changes, self.keys, self.order_by)
-        batch_latest = batch_latest.withColumn(
-            "__bucket", _bucket_expr(self.keys, self.n_buckets)
-        ).localCheckpoint(eager=True)  # pin: source micro-batch is transient
-
-        # driver-side collect is bounded by n_buckets (one int per DISTINCT
-        # bucket, never per row): <= 4 values here, <= a few thousand at a
-        # realistic production bucket count -- metadata-sized by construction
-        affected = [
-            r["__bucket"]
-            for r in batch_latest.select("__bucket").distinct().collect()
-        ]
-        if not affected:
-            m["txn"][writer_id] = batch_id
-            self._write_manifest(m)
-            return
-
-        version = m["version"] + 1
-        payload_cols = [c for c in batch_latest.columns
-                        if c not in (op_col, "__bucket")]
-
-        # union the CURRENT state of only the affected buckets (bucket
-        # pruning: untouched buckets are never read or rewritten) with the
-        # batch, take latest per key, drop deleted keys
-        old_dirs = [
-            os.path.join(self.path, m["buckets"][str(b)])
-            for b in affected
-            if str(b) in m["buckets"]
-        ]
-        old_dirs = [d for d in old_dirs if os.path.exists(d)]
-        batch_rows = batch_latest.drop("__bucket").withColumn("__gen", F.lit(1))
-        if old_dirs:
-            old = (
-                self.spark.read.format(self.data_format).load(old_dirs)
-                .withColumn(op_col, F.lit("I"))
-                .withColumn("__gen", F.lit(0))
+            staged = self._stage_batch(changes, batch_id, writer_id)
+            if staged is None:
+                return
+            m, batch_id, batch, affected = staged
+            if any("#" in k for k in m["buckets"]):
+                # pending delta files: fold them first so the bucket rewrite
+                # below sees every committed row (merge reads base dirs only)
+                self.compact()
+                m = self._read_manifest()
+            version = m["version"] + 1
+            payload_cols = [c for c in batch.columns
+                            if c not in (op_col, "__bucket")]
+            # union the CURRENT state of only the affected buckets (bucket
+            # pruning: untouched buckets are never read or rewritten) with
+            # the batch, take latest per key, drop deleted keys
+            old_dirs, _ = self._dirs(m["buckets"], wanted=set(affected))
+            merged = batch.drop("__bucket").withColumn("__gen", F.lit(1))
+            if old_dirs:
+                old = (
+                    self._load(old_dirs)
+                    .withColumn(op_col, F.lit("I"))
+                    .withColumn("__gen", F.lit(0))
+                )
+                merged = latest_by_key(
+                    old.unionByName(merged), self.keys, ["__gen"]
+                )
+            result = merged.filter(F.col(op_col) != OP_DELETE).select(*payload_cols)
+            written = self._write_buckets(
+                result, version, self.n_buckets, len(affected)
             )
-            merged = latest_by_key(
-                old.unionByName(batch_rows), self.keys, ["__gen"]
-            )
-        else:
-            merged = batch_rows
-        result = (
-            merged.filter(F.col(op_col) != OP_DELETE)
-            .select(*payload_cols)
-            .withColumn("__bucket", _bucket_expr(self.keys, self.n_buckets))
-        )
-        # ONE partitioned write job for all affected buckets -- co-located
-        # so each bucket lands as ONE file (see _bucket_colocate: the r15
-        # point-serve audit found per-bucket file counts, not bucket
-        # counts, dominating lookup open cost)
-        result = _bucket_colocate(result, len(affected))
-        vdir = f"v{version}"
-        result.write.partitionBy("__bucket").mode("overwrite").format(
-            self.data_format
-        ).save(os.path.join(self.path, vdir))
-
-        superseded = [
-            m["buckets"][str(b)] for b in affected if str(b) in m["buckets"]
-        ]
-        # history delta BEFORE the pointer swap: bucket -> prior dir (None =
-        # bucket did not exist), enough to undo this commit on a time-travel
-        # read
-        changed = {str(b): m["buckets"].get(str(b)) for b in affected}
-        for b in affected:
-            bdir = os.path.join(vdir, f"__bucket={b}")
-            if os.path.exists(os.path.join(self.path, bdir)):
-                m["buckets"][str(b)] = bdir
-            else:
-                # the merge deleted every key in this bucket: no partition
-                # dir was written, so drop the pointer rather than leave it
-                # dangling (a versioned read must only see real dirs)
-                m["buckets"].pop(str(b), None)
-        m["version"] = version
-        m["txn"][writer_id] = batch_id
-        self._record_commit(m, version, writer_id, batch_id, changed)
-        expired = self._queue_gc(m, superseded)
-        self._write_manifest(m)
-        for d in expired:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-
-    # -- delta ingest (LSM write path) --------------------------------------
+            # a bucket whose every key the batch deleted gets no dir: its
+            # pointer is dropped rather than left dangling
+            self._commit(m, version, [str(b) for b in affected], written,
+                         writer_id, batch_id)
 
     def ingest(self, changes: DataFrame, batch_id: int | None = None,
                writer_id: str = "default", op_col: str = "op",
@@ -789,16 +785,9 @@ class PKTable:
         num-sorted-run.compaction-trigger). The day-2 serving-index path:
         a daily band/code batch lands at batch cost every day, and the
         full-table cost is paid once per threshold-many days."""
-        with _commit_lock(self.path):
-            self._ingest_locked(changes, batch_id, writer_id, op_col,
-                                compact_threshold)
-
-    def _ingest_locked(self, changes: DataFrame, batch_id: int | None,
-                       writer_id: str, op_col: str,
-                       compact_threshold: int) -> None:
-        # unlike merge()'s transient use, ingest PERSISTS __op/__dv/__bucket
-        # into the delta files as merge-on-read metadata -- a payload column
-        # with one of these names would corrupt resolution, so refuse it
+        # ingest PERSISTS __op/__dv/__bucket into the delta files as
+        # merge-on-read metadata -- a payload column with one of these
+        # names would corrupt resolution, so refuse it
         reserved = {"__op", "__dv", "__bucket"} & (set(changes.columns) - {op_col})
         if reserved:
             raise ValueError(
@@ -806,65 +795,28 @@ class PKTable:
                 " delta files' reserved merge-on-read columns"
                 " (__op/__dv/__bucket); rename them before ingesting"
             )
-        self._fence()
-        m = self._read_manifest()
-        if batch_id is None:
-            batch_id = m["txn"].get(writer_id, -1) + 1
-        if m["txn"].get(writer_id, -1) >= batch_id:
-            return
-
-        batch_latest = latest_by_key(changes, self.keys, self.order_by)
-        batch_latest = batch_latest.withColumn(
-            "__bucket", _bucket_expr(self.keys, self.n_buckets)
-        ).localCheckpoint(eager=True)
-        affected = [
-            r["__bucket"]
-            for r in batch_latest.select("__bucket").distinct().collect()
-        ]
-        if not affected:
-            m["txn"][writer_id] = batch_id
-            self._write_manifest(m)
-            return
-
-        version = m["version"] + 1
-        vdir = f"v{version}"
-        payload_cols = [c for c in batch_latest.columns
-                        if c not in (op_col, "__bucket")]
-        out = (
-            batch_latest.select(
-                *payload_cols, F.col(op_col).alias("__op"), "__bucket"
-            )
-            .withColumn("__dv", F.lit(version).cast("long"))
-        )
-        # ONE file per touched bucket per delta commit (Paimon's
-        # one-sorted-run-per-commit); the batch is |batch|-sized, so
-        # collapsing write parallelism to the touched-bucket count costs
-        # nothing -- see _bucket_colocate, which the base-write paths
-        # share since the r15 point-serve audit.
-        out = _bucket_colocate(out, len(affected))
-        out.write.partitionBy("__bucket").mode("overwrite").format(
-            self.data_format
-        ).save(os.path.join(self.path, vdir))
-
-        changed: dict = {}
-        for b in affected:
-            bdir = os.path.join(vdir, f"__bucket={b}")
-            if os.path.exists(os.path.join(self.path, bdir)):
-                key = f"{b}#d{version}"
-                m["buckets"][key] = bdir
-                changed[key] = None  # new pointer: undo = pop
-        m["version"] = version
-        m["txn"][writer_id] = batch_id
-        self._record_commit(m, version, writer_id, batch_id, changed)
-        self._write_manifest(m)
-
-        depth: dict[str, int] = {}
-        for k in m["buckets"]:
-            if "#" in k:
-                b = k.split("#", 1)[0]
-                depth[b] = depth.get(b, 0) + 1
-        if depth and max(depth.values()) > compact_threshold:
-            self._compact_locked()
+        with _commit_lock(self.path):
+            staged = self._stage_batch(changes, batch_id, writer_id)
+            if staged is None:
+                return
+            m, batch_id, batch, affected = staged
+            version = m["version"] + 1
+            payload_cols = [c for c in batch.columns
+                            if c not in (op_col, "__bucket")]
+            out = batch.select(
+                *payload_cols, F.col(op_col).alias("__op")
+            ).withColumn("__dv", F.lit(version).cast("long"))
+            # ONE file per touched bucket per delta commit (Paimon's
+            # one-sorted-run-per-commit); the batch is |batch|-sized, so
+            # collapsing write parallelism to the touched-bucket count
+            # costs nothing
+            written = self._write_buckets(out, version, self.n_buckets, len(affected))
+            self._commit(m, version, [],
+                         {f"{b}#d{version}": d for b, d in written.items()},
+                         writer_id, batch_id)
+            depth = Counter(_bucket_of(k) for k in m["buckets"] if "#" in k)
+            if depth and max(depth.values()) > compact_threshold:
+                self.compact()
 
     def compact(self) -> None:
         """Fold every pending delta file into its bucket's base -- the LSM
@@ -873,123 +825,46 @@ class PKTable:
         delta dirs keep their GC grace, so time travel across the
         compaction boundary keeps working."""
         with _commit_lock(self.path):
-            self._compact_locked()
-
-    def _compact_locked(self) -> None:
-        self._fence()
-        m = self._read_manifest()
-        delta_keys = sorted(k for k in m["buckets"] if "#" in k)
-        if not delta_keys:
-            return
-        affected = sorted({int(k.split("#", 1)[0]) for k in delta_keys})
-        base_dirs = [
-            os.path.join(self.path, m["buckets"][str(b)])
-            for b in affected if str(b) in m["buckets"]
-        ]
-        base_dirs = [d for d in base_dirs if os.path.exists(d)]
-        delta_dirs = [os.path.join(self.path, m["buckets"][k]) for k in delta_keys]
-        delta_dirs = [d for d in delta_dirs if os.path.exists(d)]
-        resolved = self._resolve_dirs(base_dirs, delta_dirs)
-
-        version = m["version"] + 1
-        vdir = f"v{version}"
-        if resolved is not None:
-            result = resolved.withColumn(
-                "__bucket", _bucket_expr(self.keys, self.n_buckets)
+            self._fence()
+            m = self._read_manifest()
+            delta_keys = sorted(k for k in m["buckets"] if "#" in k)
+            if not delta_keys:
+                return
+            affected = sorted({_bucket_of(k) for k in delta_keys})
+            version = m["version"] + 1
+            resolved = self._resolve_dirs(
+                *self._dirs(m["buckets"], wanted=set(affected))
             )
-            result = _bucket_colocate(result, len(affected))
-            result.write.partitionBy("__bucket").mode("overwrite").format(
-                self.data_format
-            ).save(os.path.join(self.path, vdir))
-
-        changed: dict = {}
-        superseded: list[str] = []
-        for b in affected:
-            prior = m["buckets"].get(str(b))
-            changed[str(b)] = prior
-            if prior is not None:
-                superseded.append(prior)
-            bdir = os.path.join(vdir, f"__bucket={b}")
-            if os.path.exists(os.path.join(self.path, bdir)):
-                m["buckets"][str(b)] = bdir
-            else:
-                # every key in this bucket was deleted by the deltas
-                m["buckets"].pop(str(b), None)
-        for k in delta_keys:
-            changed[k] = m["buckets"][k]
-            superseded.append(m["buckets"][k])
-            m["buckets"].pop(k)
-        m["version"] = version
-        self._record_commit(m, version, None, None, changed)
-        expired = self._queue_gc(m, superseded)
-        self._write_manifest(m)
-        for d in expired:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-
-    def _queue_gc(self, m: dict, superseded: Sequence[str]) -> list[str]:
-        """Age-based GC: newly superseded dirs enter the manifest's `gc`
-        ledger; entries older than `gc_grace_secs` are returned for removal
-        (after the manifest swap, so a crash can only under-delete)."""
-        now = time.time()
-        pending = m.get("gc", []) + [{"dir": d, "ts": now} for d in superseded]
-        keep: list[dict] = []
-        expired: list[str] = []
-        for e in pending:
-            if now - e["ts"] >= self.gc_grace_secs:
-                expired.append(e["dir"])
-            else:
-                keep.append(e)
-        m["gc"] = keep
-        return expired
+            written = self._write_buckets(
+                resolved, version, self.n_buckets, len(affected)
+            )
+            self._commit(m, version, [*map(str, affected), *delta_keys], written)
 
     def overwrite(self, df: DataFrame) -> None:
         """Full snapshot replace (used for seeding / batch backfills)."""
         with _commit_lock(self.path):
-            self._overwrite_locked(df)
-
-    def _overwrite_locked(self, df: DataFrame) -> None:
-        self._fence()
-        m = self._read_manifest()
-        version = m["version"] + 1
-        vdir = f"v{version}"
-        bucketed = df.withColumn("__bucket", _bucket_expr(self.keys, self.n_buckets))
-        bucketed = _bucket_colocate(bucketed, self.n_buckets)
-        bucketed.write.partitionBy("__bucket").mode("overwrite").format(
-            self.data_format
-        ).save(os.path.join(self.path, vdir))
-        old = dict(m["buckets"])
-        # register only the bucket dirs the write actually produced (a seed
-        # whose rows hash into a subset of buckets writes only those
-        # partitions; dangling pointers would break versioned reads)
-        m["buckets"] = {
-            str(b): os.path.join(vdir, f"__bucket={b}")
-            for b in range(self.n_buckets)
-            if os.path.exists(os.path.join(self.path, vdir, f"__bucket={b}"))
-        }
-        m["version"] = version
-        self._record_commit(
-            m, version, None, None,
-            {b: old.get(b) for b in set(old) | set(m["buckets"])},
-        )
-        # a full replace starts a new txn epoch: keeping the per-writer
-        # high-watermarks would silently no-op every merge from a stream
-        # restarted with a fresh checkpoint (batch ids restart at 0), freezing
-        # the table at the seed. Re-seeding + replay stays safe without them:
-        # a replayed upsert re-applies the same latest-per-key rows.
-        m["txn"] = {}
-        # ...and the retained history must follow the txn reset: a restarted
-        # stream reuses batch ids from 0, so pre-overwrite (writer, batch)
-        # tags would let snapshot_at_batch silently answer a NEW-epoch probe
-        # with an OLD-epoch state. Strip the tags (version time travel keeps
-        # working -- the undo deltas are untouched); read-at-batch then only
-        # matches commits from the current epoch.
-        for e in m["history"][:-1]:
-            e["writer"] = None
-            e["batch"] = None
-        expired = self._queue_gc(m, list(old.values()))
-        self._write_manifest(m)
-        for d in expired:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+            self._fence()
+            m = self._read_manifest()
+            version = m["version"] + 1
+            written = self._write_buckets(df, version, self.n_buckets, self.n_buckets)
+            # a full replace starts a new txn epoch: keeping the per-writer
+            # high-watermarks would silently no-op every merge from a stream
+            # restarted with a fresh checkpoint (batch ids restart at 0),
+            # freezing the table at the seed. Re-seeding + replay stays safe
+            # without them: a replayed upsert re-applies the same
+            # latest-per-key rows.
+            m["txn"] = {}
+            # ...and the retained history must follow the txn reset: a
+            # restarted stream reuses batch ids from 0, so pre-overwrite
+            # (writer, batch) tags would let snapshot_at_batch silently
+            # answer a NEW-epoch probe with an OLD-epoch state. Strip the
+            # tags (version time travel keeps working -- the undo deltas are
+            # untouched); read-at-batch then only matches commits from the
+            # current epoch.
+            for e in m.get("history", []):
+                e["writer"] = None
+                e["batch"] = None
+            self._commit(m, version, list(m["buckets"]), written)
 
     def rescale(self, n_buckets: int) -> None:
         """Offline bucket rescale -- Paimon's documented rescale-bucket
@@ -1014,45 +889,15 @@ class PKTable:
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
         with _commit_lock(self.path):
-            self._rescale_locked(n_buckets)
-
-    def _rescale_locked(self, n_buckets: int) -> None:
-        self._fence()
-        m = self._read_manifest()
-        prev_nb = m.get("n_buckets", self.n_buckets)
-        if n_buckets == prev_nb:
-            return
-        snap = self.snapshot()
-        version = m["version"] + 1
-        vdir = f"v{version}"
-        if snap is not None:
-            # one partitioned write job: shuffle-free up to the hash
-            # partitioning the write itself needs -- every row moves at
-            # most once, straight from the pruned scan to its new bucket
-            bucketed = snap.withColumn(
-                "__bucket", _bucket_expr(self.keys, n_buckets)
-            )
-            bucketed = _bucket_colocate(bucketed, n_buckets)
-            bucketed.write.partitionBy("__bucket").mode("overwrite").format(
-                self.data_format
-            ).save(os.path.join(self.path, vdir))
-        old = dict(m["buckets"])
-        m["buckets"] = {
-            str(b): os.path.join(vdir, f"__bucket={b}")
-            for b in range(n_buckets)
-            if os.path.exists(os.path.join(self.path, vdir, f"__bucket={b}"))
-        }
-        m["version"] = version
-        m["n_buckets"] = n_buckets
-        self._record_commit(
-            m, version, None, None,
-            {b: old.get(b) for b in set(old) | set(m["buckets"])},
-        )
-        # undo info for _n_buckets_at: reads at versions BEFORE this commit
-        # hash with the pre-rescale count
-        m["history"][-1]["nb"] = prev_nb
-        expired = self._queue_gc(m, list(old.values()))
-        self._write_manifest(m)
-        self.n_buckets = n_buckets
-        for d in expired:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+            self._fence()
+            m = self._read_manifest()
+            prev_nb = m.get("n_buckets", self.n_buckets)
+            if n_buckets == prev_nb:
+                return
+            version = m["version"] + 1
+            # one partitioned write job: every row moves at most once,
+            # straight from the pruned scan to its new bucket
+            written = self._write_buckets(self.snapshot(), version, n_buckets, n_buckets)
+            m["n_buckets"] = n_buckets
+            self._commit(m, version, list(m["buckets"]), written, nb=prev_nb)
+            self.n_buckets = n_buckets

@@ -131,6 +131,23 @@ def test_merge_after_ingest_sees_delta_rows(spark, tmp_path):
     assert not any("#" in k for k in t._read_manifest()["buckets"])
 
 
+def test_merge_replay_with_pending_deltas_commits_nothing(spark, tmp_path):
+    """merge() checks the txn watermark BEFORE folding pending deltas: a
+    replayed batch on a table with deltas is a no-op, not a compaction
+    commit that burns a version (ingest's "replay = no commit" property)."""
+    t = PKTable(spark, str(tmp_path / "mreplay"), keys=["k"], order_by=["seq"])
+    t.ingest(_rows(spark, [(1, 1, "a")]), batch_id=0, writer_id="ing")
+    t.merge(_rows(spark, [(2, 2, "b")]), batch_id=5, writer_id="m")
+    t.ingest(_rows(spark, [(3, 3, "c")]), batch_id=1, writer_id="ing")
+    m = t._read_manifest()
+    assert any("#" in k for k in m["buckets"])  # a delta is pending
+    t.merge(_rows(spark, [(4, 2, "SHOULD-NOT-APPLY")]), batch_id=5, writer_id="m")
+    after = t._read_manifest()
+    assert after["version"] == m["version"]
+    assert after["buckets"] == m["buckets"]  # the delta is still pending
+    assert _snap(t) == {1: "a", 2: "b", 3: "c"}
+
+
 def test_overwrite_clears_deltas(spark, tmp_path):
     t = PKTable(spark, str(tmp_path / "ow"), keys=["k"], order_by=["seq"])
     t.ingest(_rows(spark, [(1, 1, "a"), (2, 2, "b")]), batch_id=0)

@@ -135,6 +135,8 @@ def test_expired_version_raises_not_wrong_answer(spark, tmp_path):
     t.merge(_batch(spark, [("U", 2, 1, "a2")]), batch_id=1)
     with pytest.raises(ValueError, match="expired"):
         t.snapshot(version=1)
+    with pytest.raises(ValueError, match="expired"):
+        t.lookup(spark.createDataFrame([(1,)], "k long"), version=1)
     assert _state(t) == {1: "a2"}
     with pytest.raises(ValueError, match="unknown version"):
         t.snapshot(version=99)
