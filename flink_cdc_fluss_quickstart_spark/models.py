@@ -211,18 +211,19 @@ def save_langid_model(
     path: str,
     weights: DataFrame,
     hot: DataFrame,
-    classes: bool = False,
 ) -> None:
     """Publish a trained langid model: weights -> PKTable keyed by bucket
-    (by (bucket, cls) for the multiclass one-vs-rest frame), hot grams ->
-    PKTable keyed by gram, then the featurization meta + publish-ledger
-    entry recording the two tables' committed versions -- written LAST, the
-    atomic cutover (see module docstring): a crash between the table
-    commits leaves the previous complete publish in force.
+    (by (bucket, cls) when the frame carries the multiclass one-vs-rest
+    ``cls`` column), hot grams -> PKTable keyed by gram, then the
+    featurization meta + publish-ledger entry recording the two tables'
+    committed versions -- written LAST, the atomic cutover (see module
+    docstring): a crash between the table commits leaves the previous
+    complete publish in force.
 
     100 TB posture: both writes are straight distributed parquet -- the
     weight frame never visits the driver (at fastText's 2M-bucket space it
     never could), and the hot list is the bounded df-capped Zipf head."""
+    classes = "cls" in weights.columns
     wkeys = ["b", "cls"] if classes else ["b"]
     wt = _table(spark, os.path.join(path, "weights"), wkeys, wkeys)
     wt.overwrite(weights.select(*wkeys, "w"))
@@ -231,11 +232,11 @@ def save_langid_model(
     # empty overwrites, and load distinguishes "no hot grams" from "no model"
     ht.overwrite(hot.select("gram"))
     meta = _hlr_meta()
-    meta["classes"] = bool(classes)
+    meta["classes"] = classes
     _publish_meta(
         path, meta,
         {"weights": _current_version(wt), "hot": _current_version(ht)},
-        extra={"classes": bool(classes)},
+        extra={"classes": classes},
     )
 
 

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_cdc_fluss_quickstart_spark.functions import dedup, text
 from flink_cdc_fluss_quickstart_spark.plans.registry import register
+from flink_cdc_fluss_quickstart_spark.session import loop_frame, rebind
 from flink_cdc_fluss_quickstart_spark.tables import load_table, spread, table_row_count
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in text.STOPWORDS)
@@ -2570,31 +2571,28 @@ def bpe_learn_merges(vocab: DataFrame, n_merges: int) -> tuple[DataFrame, list[t
     connected-components precedent); the corpus itself is never touched --
     rounds operate on the vocab census exclusively.
 
-    Loop-frame discipline (r15, tightened r16): the vocab is
-    localCheckpoint-ed EVERY round, not persisted -- each round's census
-    then reads a flat RDD scan instead of a k-deep stack of cached fold
-    plans, so Catalyst analysis cost per round is O(1) in merge depth (the
-    fold expression is large; re-analyzing k copies of it dominated round
-    latency). Materialization count is unchanged. The frame is also
-    coalesced once to ~_BPE_VOCAB_ROWS_PER_PART rows per partition
-    (measured, not assumed -- the checkpoint makes the count a metadata
-    read).
+    Loop-frame discipline: the vocab is localCheckpoint-ed EVERY round,
+    not persisted -- each round's census then reads a flat RDD scan
+    instead of a k-deep stack of cached fold plans, so Catalyst analysis
+    cost per round is O(1) in merge depth (the fold expression is large).
+    The frame is also coalesced once to ~_BPE_VOCAB_ROWS_PER_PART rows per
+    partition (measured, not assumed -- the checkpoint makes the count a
+    metadata read).
 
-    r16: each round is now exactly ONE job (statusTracker-verified
-    3 -> 1). The per-round checkpoint is LAZY (eager=False): the fold is
-    shuffle-free, so marking it checkpoints nothing at call time, and the
-    census job -- whose shuffle-map side necessarily computes every fold
-    partition -- materializes it as a side effect, replacing the separate
-    eager-materialization job. And the census runs with AQE temporarily
-    off (restored in a finally, the logreg-fit rule): a fixed-shape
-    vocab-sized aggregate gains nothing from adaptive re-planning but
-    paid a stage-materialization job round-trip per round at any merge
-    depth -- 32k-100k rounds at production depth. The one-time
-    corpus-sized census up front keeps AQE (its shuffles are the ones
-    adaptive sizing exists for). Cluster-mode caveat (ADVICE r15):
-    localCheckpoint truncates lineage to executor-local storage, so an
-    executor lost mid-loop is unrecoverable at real merge depth --
-    deployments running to 32k+ merges should swap the per-round
+    Each round is exactly ONE job. The per-round checkpoint is LAZY
+    (eager=False): the fold is shuffle-free, so marking it checkpoints
+    nothing at call time, and the census job -- whose shuffle-map side
+    necessarily computes every fold partition -- materializes it as a
+    side effect. And the census runs in a loop session with AQE off
+    (session.loop_frame, the logreg-fit rule): a fixed-shape vocab-sized
+    aggregate gains nothing from adaptive re-planning but would pay a
+    stage-materialization job round-trip per round at any merge depth --
+    32k-100k rounds at production depth. The one-time corpus-sized census
+    up front keeps AQE (its shuffles are the ones adaptive sizing exists
+    for). Cluster-mode caveat (ADVICE r15): localCheckpoint truncates
+    lineage to executor-local storage, so an executor lost mid-loop is
+    unrecoverable at real merge depth -- deployments running to 32k+
+    merges should swap the per-round
     localCheckpoint for periodic reliable checkpoint() at the same seam."""
     merges: list[tuple[str, str]] = []
     # one checkpoint up front: materializes the census, truncates its
@@ -2605,52 +2603,46 @@ def bpe_learn_merges(vocab: DataFrame, n_merges: int) -> tuple[DataFrame, list[t
     if target < cur.rdd.getNumPartitions():
         # narrow post-checkpoint coalesce; every later checkpoint inherits it
         cur = cur.coalesce(target)
+    # the census runs in a loop session with AQE off and the shuffle sized
+    # to the SAME measured vocab-derived target as the frame itself
+    # (measured at sf0.1: 201 -> 15 tasks across a 6-merge loop, ~-0.3 s
+    # warm); the caller's session keeps its own settings
     spark = vocab.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # with AQE off the census shuffle would run the static session width
-    # per round; size it to the SAME measured vocab-derived target as the
-    # frame itself (scale-adaptive, restored below). Measured at sf0.1:
-    # 201 -> 15 tasks across a 6-merge loop, ~-0.3 s warm.
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    try:
-        for _ in range(n_merges):
-            s = F.split("sym", r"\|")
-            best = (
-                cur.withColumn("s", s)
-                .filter(F.size("s") >= 2)
-                .select(
-                    F.explode(
-                        F.expr(
-                            "transform(sequence(0, size(s) - 2),"
-                            " j -> struct(s[j] AS a, s[j + 1] AS b))"
-                        )
-                    ).alias("p"),
-                    "c",
-                )
-                .groupBy("p.a", "p.b")
-                .agg(F.sum("c").alias("pc"))
-                .orderBy(F.col("pc").desc(), "a", "b")
-                .limit(1)
-                .collect()
+    cur = loop_frame(
+        cur,
+        {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": str(target)},
+    )
+    for _ in range(n_merges):
+        s = F.split("sym", r"\|")
+        best = (
+            cur.withColumn("s", s)
+            .filter(F.size("s") >= 2)
+            .select(
+                F.explode(
+                    F.expr(
+                        "transform(sequence(0, size(s) - 2),"
+                        " j -> struct(s[j] AS a, s[j + 1] AS b))"
+                    )
+                ).alias("p"),
+                "c",
             )
-            if not best:  # every word is a single symbol already
-                break
-            a, b = best[0]["a"], best[0]["b"]
-            merges.append((a, b))
-            folded = cur.select(
-                "tok", "c", _bpe_apply_merge(F.col("sym"), a, b).alias("sym")
-            )
-            # flatten every round: the next census's job materializes this
-            # (lazy) checkpoint while computing its shuffle-map side, and
-            # the fold lineage is dropped so the next round analyzes a
-            # constant-size plan
-            cur = folded.localCheckpoint(eager=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return cur, merges
+            .groupBy("p.a", "p.b")
+            .agg(F.sum("c").alias("pc"))
+            .orderBy(F.col("pc").desc(), "a", "b")
+            .limit(1)
+            .collect()
+        )
+        if not best:  # every word is a single symbol already
+            break
+        a, b = best[0]["a"], best[0]["b"]
+        merges.append((a, b))
+        folded = cur.select("tok", "c", _bpe_apply_merge(F.col("sym"), a, b).alias("sym"))
+        # flatten every round: the next census's job materializes this
+        # (lazy) checkpoint while computing its shuffle-map side, and the
+        # fold lineage is dropped so the next round analyzes a
+        # constant-size plan
+        cur = folded.localCheckpoint(eager=False)
+    return rebind(cur, spark), merges
 
 
 def bpe_encode_frame(d: DataFrame, n_merges: int = BPE_ENCODE_MERGES) -> DataFrame:
@@ -4022,6 +4014,11 @@ def _lr_sig(z: F.Column) -> F.Column:
     return F.lit(0.5) + F.lit(0.5) * (z / (F.lit(1.0) + F.abs(z)))
 
 
+def _duck_sig(z: str) -> str:
+    """_lr_sig as DuckDB SQL over the expression text `z`."""
+    return f"(0.5 + 0.5 * ({z} / (1.0 + abs({z}))))"
+
+
 class LogregModel(NamedTuple):
     """The trained quality scorer's complete driver-side state: GD weights
     over standardized features plus the standardization moments that define
@@ -4098,20 +4095,21 @@ def _logreg_fit_full(
     in-session scorer reuses the standardized projection without a second
     corpus pass.
 
-    Loop discipline (r16 optimization round, measured): the fit's
-    reductions run with AQE temporarily OFF (restored in a finally) --
-    every one is a fixed-shape one-row aggregate over a cached bounded
-    projection, where adaptive re-planning can decide nothing but adds a
-    stage-materialization job round-trip per shuffle PER ROUND at any
-    scale; without it each GD round is exactly ONE job (statusTracker:
-    17 -> 8 jobs per 8-round fit). The std frame is also coalesced from
-    the measured doc count (_LOGREG_STD_ROWS_PER_PART) before caching so a
-    round's partial aggregate schedules tasks proportional to data, not to
-    the scan width. Paired A/B at sf0.1: 8-round loop 2.2-3.2 s ->
-    1.3-1.9 s, weights bit-identical. (A broadcast-weights variant --
-    LocalRelation columns instead of per-round literals, to dodge the
-    per-round codegen -- was measured 2.4x SLOWER per round and rejected:
-    the broadcast build outweighs janino on this plan shape.)"""
+    Loop discipline (measured): the fit's reductions run in a loop
+    session with AQE OFF (session.loop_frame; the caller's session is
+    never touched) -- every one is a fixed-shape one-row aggregate over a
+    cached bounded projection, where adaptive re-planning can decide
+    nothing but adds a stage-materialization job round-trip per shuffle
+    PER ROUND at any scale; without it each GD round is exactly ONE job
+    (statusTracker: 17 -> 8 jobs per 8-round fit). The std frame is also
+    coalesced from the measured doc count (_LOGREG_STD_ROWS_PER_PART)
+    before caching so a round's partial aggregate schedules tasks
+    proportional to data, not to the scan width. Paired A/B at sf0.1:
+    8-round loop 2.2-3.2 s -> 1.3-1.9 s, weights bit-identical. (A
+    broadcast-weights variant -- LocalRelation columns instead of
+    per-round literals, to dodge the per-round codegen -- was measured
+    2.4x SLOWER per round and rejected: the broadcast build outweighs
+    janino on this plan shape.)"""
     scale = float(LOGREG_SCALE)
     feats = logreg_features_frame(d)
     if train_bucket is not None:
@@ -4124,71 +4122,67 @@ def _logreg_fit_full(
             ),
             "doc_id",
         )
-    feats = _cached(feats)
+    # the reductions run in a loop session with AQE off; the caller's
+    # session keeps its own settings
+    feats = loop_frame(_cached(feats), {"spark.sql.adaptive.enabled": "false"})
     red = feats.filter("tr") if train_bucket is not None else feats
-    spark = d.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        row = red.agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.sum(F.floor(F.lit(scale) * F.col(f"x{j}"))).alias(f"m{j}")
-                for j in range(1, _LR_NFEAT)
-            ],
-        ).collect()[0]
-        n = max(row["n"], 1)
-        m = {
-            j: ((row[f"m{j}"] if row[f"m{j}"] is not None else 0) / scale) / n
+    row = red.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[
+            F.sum(F.floor(F.lit(scale) * F.col(f"x{j}"))).alias(f"m{j}")
             for j in range(1, _LR_NFEAT)
-        }
-        vrow = red.agg(
+        ],
+    ).collect()[0]
+    n = max(row["n"], 1)
+    m = {
+        j: ((row[f"m{j}"] if row[f"m{j}"] is not None else 0) / scale) / n
+        for j in range(1, _LR_NFEAT)
+    }
+    vrow = red.agg(
+        *[
+            F.sum(
+                F.floor(
+                    F.lit(scale)
+                    * ((F.col(f"x{j}") - F.lit(m[j])) * (F.col(f"x{j}") - F.lit(m[j])))
+                )
+            ).alias(f"v{j}")
+            for j in range(1, _LR_NFEAT)
+        ]
+    ).collect()[0]
+    sd = {}
+    for j in range(1, _LR_NFEAT):
+        s = math.sqrt(((vrow[f"v{j}"] if vrow[f"v{j}"] is not None else 0) / scale) / n)
+        sd[j] = 1.0 if s == 0.0 else s
+    m_full = (0.0,) + tuple(m[j] for j in range(1, _LR_NFEAT))
+    sd_full = (1.0,) + tuple(sd[j] for j in range(1, _LR_NFEAT))
+    # row["n"] is the train-bucket count under holdout; the frame holds
+    # every doc either way -- the sizing only needs the order of
+    # magnitude, and the full count is not collected separately
+    target = max(1, -(-n // _LOGREG_STD_ROWS_PER_PART))
+    std = _cached(
+        _lr_std_frame(feats, m_full, sd_full, train_bucket is not None).coalesce(
+            target
+        )
+    )
+    std_red = std.filter("tr") if train_bucket is not None else std
+    w = [0.0] * _LR_NFEAT
+    for _ in range(LOGREG_ROUNDS):
+        sgm = _lr_sig(_lr_z(w, "s"))
+        g = std_red.agg(
             *[
                 F.sum(
-                    F.floor(
-                        F.lit(scale)
-                        * ((F.col(f"x{j}") - F.lit(m[j])) * (F.col(f"x{j}") - F.lit(m[j])))
-                    )
-                ).alias(f"v{j}")
-                for j in range(1, _LR_NFEAT)
-            ]
-        ).collect()[0]
-        sd = {}
-        for j in range(1, _LR_NFEAT):
-            s = math.sqrt(((vrow[f"v{j}"] if vrow[f"v{j}"] is not None else 0) / scale) / n)
-            sd[j] = 1.0 if s == 0.0 else s
-        m_full = (0.0,) + tuple(m[j] for j in range(1, _LR_NFEAT))
-        sd_full = (1.0,) + tuple(sd[j] for j in range(1, _LR_NFEAT))
-        # row["n"] is the train-bucket count under holdout; the frame holds
-        # every doc either way -- the sizing only needs the order of
-        # magnitude, and the full count is not collected separately
-        target = max(1, -(-n // _LOGREG_STD_ROWS_PER_PART))
-        std = _cached(
-            _lr_std_frame(feats, m_full, sd_full, train_bucket is not None).coalesce(
-                target
-            )
-        )
-        std_red = std.filter("tr") if train_bucket is not None else std
-        w = [0.0] * _LR_NFEAT
-        for _ in range(LOGREG_ROUNDS):
-            sgm = _lr_sig(_lr_z(w, "s"))
-            g = std_red.agg(
-                *[
-                    F.sum(
-                        F.floor(F.lit(scale) * ((sgm - F.col("y")) * F.col(f"s{j}")))
-                    ).alias(f"g{j}")
-                    for j in range(_LR_NFEAT)
-                ]
-            ).collect()[0]
-            w = [
-                w[j]
-                - LOGREG_LR * (((g[f"g{j}"] if g[f"g{j}"] is not None else 0) / scale) / n)
+                    F.floor(F.lit(scale) * ((sgm - F.col("y")) * F.col(f"s{j}")))
+                ).alias(f"g{j}")
                 for j in range(_LR_NFEAT)
             ]
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        ).collect()[0]
+        w = [
+            w[j]
+            - LOGREG_LR * (((g[f"g{j}"] if g[f"g{j}"] is not None else 0) / scale) / n)
+            for j in range(_LR_NFEAT)
+        ]
     model = LogregModel(tuple(w), m_full, sd_full, n, train_bucket)
-    return model, std
+    return model, rebind(std, d.sparkSession)
 
 
 def logreg_fit(d: DataFrame, train_bucket: int | None = None) -> LogregModel:
@@ -4242,9 +4236,6 @@ def _lr_oracle_sql(train: bool = False) -> str:
             e = f"({e} + ({wref}.w{j} * {fref}.{pfx}{j}))"
         return e
 
-    def sig(zexpr: str) -> str:
-        return f"(0.5 + 0.5 * ({zexpr} / (1.0 + abs({zexpr}))))"
-
     mm = ", ".join(
         f"SUM(CAST(floor({S} * f.x{j}) AS BIGINT)) AS M{j}" for j in range(1, _LR_NFEAT)
     )
@@ -4271,7 +4262,7 @@ def _lr_oracle_sql(train: bool = False) -> str:
     )
     rounds = []
     for r in range(1, LOGREG_ROUNDS + 1):
-        sg = sig(z(f"w{r - 1}", "s", "s"))
+        sg = _duck_sig(z(f"w{r - 1}", "s", "s"))
         gsel = ", ".join(
             f"SUM(CAST(floor({S} * (({sg} - s.y) * s.s{j})) AS BIGINT)) AS g{j}"
             for j in range(_LR_NFEAT)
@@ -4285,7 +4276,7 @@ def _lr_oracle_sql(train: bool = False) -> str:
             f"g{r} AS MATERIALIZED (SELECT {gsel} FROM s CROSS JOIN w{r - 1}{tr_s}),\n"
             f"    w{r} AS MATERIALIZED (SELECT {wsel} FROM w{r - 1} CROSS JOIN g{r} CROSS JOIN nn)"
         )
-    final_sig = sig(z(f"w{LOGREG_ROUNDS}", "s", "s"))
+    final_sig = _duck_sig(z(f"w{LOGREG_ROUNDS}", "s", "s"))
     w0 = ", ".join(f"0.0 AS w{j}" for j in range(_LR_NFEAT))
     body = ",\n    ".join(rounds)
     if train:
@@ -4787,10 +4778,6 @@ HLR_LR = 3000.0
 # vector -- same corpus-derived stop-gram rule as winnowing / the LM head
 HLR_DF_CAP_DENOM = 4
 HLR_TARGET_LANG = "en"
-# weight lineage flattens every K rounds (localCheckpoint, the BPE
-# merge-loop precedent): the frame is <= HLR_BUCKETS rows, so the pin is
-# metadata-sized while keeping the logical plan O(K) deep at any depth
-_HLR_CHECKPOINT_EVERY = 3
 
 
 def hashed_gram_frame(d: DataFrame) -> DataFrame:
@@ -4846,99 +4833,110 @@ def _corpus_side(df: DataFrame) -> DataFrame:
     return df.hint("merge")
 
 
-def _hlr_kept_feats(d: DataFrame, n: int) -> tuple[DataFrame, DataFrame]:
-    """Shared featurization behind the binary AND multiclass langid fits:
-    gram explode -> distinct-df census -> broadcast the bounded hot head
-    into a left-anti filter -> count-normalized (doc, bucket, f) rollup.
-    Returns (feats, hot); callers cache feats (it is the only corpus-sized
-    state any GD loop touches)."""
-    cap = max(n // HLR_DF_CAP_DENOM, 1)
-    grams = hashed_gram_frame(d)
-    census = grams.distinct().groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    hot = census.filter(F.col("df") > cap).select("gram")
-    kept = grams.join(F.broadcast(hot), "gram", "left_anti")
+def _hlr_hot(d: DataFrame, n: int) -> DataFrame:
+    """The training census: grams seen in more than 1/HLR_DF_CAP_DENOM of
+    the n docs. This Zipf head is bounded (at most total_grams/cap
+    entries), so it broadcasts into the featurizer's anti-join; the tail
+    never does."""
+    grams = hashed_gram_frame(d).distinct()
+    census = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
+    return census.filter(F.col("df") > max(n // HLR_DF_CAP_DENOM, 1)).select("gram")
+
+
+def _hlr_feats(d: DataFrame, hot: DataFrame) -> DataFrame:
+    """The one langid featurizer, for fitting and serving alike: gram
+    explode -> left-anti join against the broadcast hot list ->
+    count-normalized (doc_id, b, f) rollup. Row-local given `hot`, so a
+    reloaded model featurizes exactly as its fit did, however docs are
+    batched."""
+    kept = hashed_gram_frame(d).join(F.broadcast(hot), "gram", "left_anti")
     fb = kept.groupBy("doc_id", _hlr_bucket(F.col("gram")).alias("b")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
     ngd = fb.groupBy("doc_id").agg(F.sum("cnt").alias("ng"))
-    feats = fb.join(ngd, "doc_id").select(
+    return fb.join(ngd, "doc_id").select(
         "doc_id", "b", (F.col("cnt").cast("double") / F.col("ng")).alias("f")
     )
-    return feats, hot
 
 
-def _hlr_fit_full(d: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Fit the hashed-gram binary langid model; returns (weights, hot,
-    feats, labels) -- feats/labels cached so the registered frame can score
-    without re-exploding the corpus.
-
-    Execution shape (100 TB posture): one gram explode -> distinct-df
-    census; the df-capped Zipf HEAD (bounded small: at most
-    total_grams/cap entries) broadcasts into a left-anti filter, never the
-    tail; features collapse to one (doc, bucket)-keyed rollup (cached, the
-    only corpus-sized state the loop touches). Each GD round is two
-    broadcast-joins + two exact-integer aggregates -- one doc-keyed, one
-    bucket-keyed (<= HLR_BUCKETS rows) -- and the weight update is a
-    bucket-keyed join; weights NEVER visit the driver. Once features are
-    built, round cost depends only on the (doc, bucket) rollup size, not
-    the corpus text; lineage is pinned every _HLR_CHECKPOINT_EVERY rounds."""
-    scale = float(LOGREG_SCALE)
-    labels = _cached(
-        d.select(
-            "doc_id",
-            F.when(F.col("lang") == HLR_TARGET_LANG, F.lit(1.0)).otherwise(F.lit(0.0)).alias("y"),
-        )
+def _hlr_z(feats: DataFrame, weights: DataFrame, k: int = 1) -> DataFrame:
+    """The one score aggregate: zm = sum of floor(S * w * f) per doc and
+    per every other key either side carries (cls of one-vs-rest weights,
+    lang of the fit's labelled rollup). Each term is an exact BIGINT, so
+    the sum is order-independent. `k` classes bound the weight frame at
+    HLR_BUCKETS * k rows for the join-strategy switch."""
+    keys = [c for c in feats.columns + weights.columns if c not in ("b", "f", "w")]
+    t = F.floor(F.lit(float(LOGREG_SCALE)) * (F.col("w") * F.col("f")))
+    return (
+        feats.join(_hlr_wside(weights, HLR_BUCKETS * k), "b")
+        .groupBy(*keys)
+        .agg(F.sum(t).alias("zm"))
     )
+
+
+def _hlr_fit(
+    d: DataFrame, classes: list[str] | None
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Fit one one-vs-rest linear model per class in ONE (b, cls, w)
+    weight frame; `classes=None` means one class per distinct lang. The
+    binary model is the one-class fit. Returns (weights, hot, feats) with
+    feats the cached (doc_id, b, f, lang) rollup, so callers score the
+    training corpus without a second explode.
+
+    Execution shape (100 TB posture): one gram census whose bounded hot
+    head broadcasts into the featurizer's anti-join; the labelled feature
+    rollup is the only corpus-sized state the loop touches. Each round is
+    the broadcast weight join into the (doc, lang, cls)-keyed z
+    aggregate, e = sig(zm/S) - [lang = cls], a sort-merge err join into
+    the (b, cls)-keyed gradient, and a left-join update against the
+    broadcast gradient; weights never visit the driver. The weight frame
+    is lazily localCheckpoint-ed every round (the bpe_learn_merges rule),
+    so each round plans a constant-size tree; with AQE on, marking the
+    checkpoint already runs the round's shuffle stages, and the next
+    round's weight broadcast materializes the small final stage. The
+    update streams the previous weights in its final stage, after that
+    broadcast: a second leaf stage reading them would compute them twice,
+    concurrently with the broadcast job that marks them checkpointed."""
+    scale = float(LOGREG_SCALE)
+    labels = _cached(d.select("doc_id", "lang"))
     n = labels.count()
-    feats0, hot = _hlr_kept_feats(d, n)
-    feats = _cached(feats0.join(labels, "doc_id").select("doc_id", "b", "f", "y"))
-    weights = feats.select("b").distinct().select("b", F.lit(0.0).alias("w"))
-
-    def z_frame(wf: DataFrame) -> DataFrame:
-        return (
-            feats.join(_hlr_wside(wf, HLR_BUCKETS), "b")
-            .select(
-                "doc_id",
-                "y",
-                F.floor(F.lit(scale) * (F.col("w") * F.col("f"))).alias("t"),
-            )
-            .groupBy("doc_id", "y")
-            .agg(F.sum("t").alias("zm"))
-        )
-
-    def sig_of(zm: F.Column) -> F.Column:
-        return _lr_sig(zm / F.lit(scale))
-
-    for r in range(HLR_ROUNDS):
-        err = z_frame(weights).select(
-            "doc_id", (sig_of(F.col("zm")) - F.col("y")).alias("e")
+    if classes is None:
+        classes = [r["lang"] for r in labels.select("lang").distinct().collect()]
+    hot = _hlr_hot(d, n)
+    feats = _cached(_hlr_feats(d, hot).join(labels, "doc_id"))
+    cls = d.sparkSession.createDataFrame([(c,) for c in classes], "cls string")
+    weights = (
+        feats.select("b")
+        .distinct()
+        .crossJoin(F.broadcast(cls))
+        .select("b", "cls", F.lit(0.0).alias("w"))
+    )
+    y = F.when(F.col("lang") == F.col("cls"), F.lit(1.0)).otherwise(F.lit(0.0))
+    for _ in range(HLR_ROUNDS):
+        err = _hlr_z(feats, weights, len(classes)).select(
+            "doc_id", "cls", (_lr_sig(F.col("zm") / F.lit(scale)) - y).alias("e")
         )
         g = (
             feats.join(_corpus_side(err), "doc_id")
-            .select("b", F.floor(F.lit(scale) * (F.col("e") * F.col("f"))).alias("t"))
-            .groupBy("b")
-            .agg(F.sum("t").alias("gs"))
+            .groupBy("b", "cls")
+            .agg(F.sum(F.floor(F.lit(scale) * (F.col("e") * F.col("f")))).alias("gs"))
         )
-        weights = weights.join(g, "b", "left").select(
-            "b",
-            (
-                F.col("w")
-                - F.lit(HLR_LR)
-                * ((F.coalesce(F.col("gs"), F.lit(0)) / F.lit(scale)) / F.lit(n))
-            ).alias("w"),
+        gs = F.coalesce(F.col("gs"), F.lit(0)) / F.lit(scale)
+        weights = (
+            weights.join(_hlr_wside(g, HLR_BUCKETS * len(classes)), ["b", "cls"], "left")
+            .select("b", "cls", (F.col("w") - F.lit(HLR_LR) * (gs / F.lit(n))).alias("w"))
+            .localCheckpoint(eager=False)
         )
-        if r % _HLR_CHECKPOINT_EVERY == _HLR_CHECKPOINT_EVERY - 1:
-            weights = weights.localCheckpoint()
-    return weights, hot, feats, labels
+    return weights, hot, feats
 
 
 def hashed_langid_fit(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Public fit surface: the trained model is the pair (weights, hot) --
-    a <= HLR_BUCKETS-row bucket-keyed weight frame plus the df-capped hot
-    gram list. Both broadcastable; hand them to hashed_langid_score to
-    serve any corpus or stream micro-batch."""
-    weights, hot, _feats, _labels = _hlr_fit_full(d)
-    return weights, hot
+    a <= HLR_BUCKETS-row (b, w) weight frame plus the df-capped hot gram
+    list. Both broadcastable; hand them to hashed_langid_score to serve
+    any corpus or stream micro-batch."""
+    weights, hot, _feats = _hlr_fit(d, [HLR_TARGET_LANG])
+    return weights.select("b", "w"), hot
 
 
 def hashed_langid_score(
@@ -4947,29 +4945,13 @@ def hashed_langid_score(
     hot: DataFrame,
     feats: DataFrame | None = None,
 ) -> DataFrame:
-    """Score docs with a TRAINED model -- the serving path: per-doc
-    features are row-local given the broadcast hot list, then one
-    broadcast join with the bucket-keyed weights and one doc-keyed
-    exact-integer aggregate. No training state, no cross-doc coupling, so
-    scores are identical however the docs are batched (streaming
-    micro-batch == batch of the union; tests/test_streaming_dedup.py)."""
+    """Score docs with a TRAINED model -- the serving path: row-local
+    features given the broadcast hot list, then the score aggregate. No
+    training state, no cross-doc coupling, so scores are identical however
+    the docs are batched (streaming micro-batch == batch of the union;
+    tests/test_streaming_dedup.py)."""
+    zf = _hlr_z(_hlr_feats(d, hot) if feats is None else feats, weights)
     scale = float(LOGREG_SCALE)
-    if feats is None:
-        grams = hashed_gram_frame(d)
-        kept = grams.join(F.broadcast(hot), "gram", "left_anti")
-        fb = kept.groupBy("doc_id", _hlr_bucket(F.col("gram")).alias("b")).agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        ngd = fb.groupBy("doc_id").agg(F.sum("cnt").alias("ng"))
-        feats = fb.join(ngd, "doc_id").select(
-            "doc_id", "b", (F.col("cnt").cast("double") / F.col("ng")).alias("f")
-        )
-    zf = (
-        feats.join(_hlr_wside(weights, HLR_BUCKETS), "b")
-        .select("doc_id", F.floor(F.lit(scale) * (F.col("w") * F.col("f"))).alias("t"))
-        .groupBy("doc_id")
-        .agg(F.sum("t").alias("zm"))
-    )
     sm = F.floor(F.lit(scale) * _lr_sig(F.coalesce(F.col("zm"), F.lit(0)) / F.lit(scale)))
     return d.select("doc_id").join(zf, "doc_id", "left").select(
         "doc_id",
@@ -4982,55 +4964,47 @@ def hashed_langid_frame(d: DataFrame) -> DataFrame:
     """Fit + score every doc (the registered query): fit once, score from
     the fit's own cached feature rollup (no second corpus explode), label
     alongside for the confusion readout."""
-    weights, hot, feats, labels = _hlr_fit_full(d)
-    scored = hashed_langid_score(
-        d, weights, hot, feats=feats.select("doc_id", "b", "f")
-    )
-    return labels.join(scored, "doc_id").select(
-        "doc_id",
-        F.col("y").cast("bigint").alias("is_target_lang"),
-        "score_micro",
-        "predicted",
+    weights, hot, feats = _hlr_fit(d, [HLR_TARGET_LANG])
+    scored = hashed_langid_score(d, weights.select("b", "w"), hot, feats=feats)
+    y = F.when(F.col("lang") == HLR_TARGET_LANG, F.lit(1)).otherwise(F.lit(0))
+    # d's (doc_id, lang) projection is the fit's cached label frame
+    labels = d.select("doc_id", "lang")
+    return labels.select("doc_id", y.cast("bigint").alias("is_target_lang")).join(
+        scored, "doc_id"
     )
 
 
-def _hlr_oracle_sql() -> str:
-    """DuckDB mirror: unrolled GD rounds with bucket-keyed weight CTEs --
-    the same joins, quantized sums, and association order as the frames."""
+def _hlr_oracle_prelude(classes_sql: str) -> str:
+    """DuckDB mirror of _hlr_fit, shared by both langid oracles: the
+    featurizer CTEs (docs0 ... f, f carrying lang), zero (b, cls) weights
+    over the `classes_sql` class set, HLR_ROUNDS unrolled GD rounds, and
+    the final (doc, cls)-keyed zf -- the same joins, quantized sums and
+    association order as the frames. Every round CTE is MATERIALIZED: each
+    w_r feeds two consumers and would otherwise inline exponentially."""
     from flink_cdc_fluss_quickstart_spark.plans.pipeline_queries import _duck_hex
 
     S = _LR_S
     hx = _duck_hex("md5('hg|' || gram)")
     bucket = f"({hx} % {HLR_BUCKETS})"
-
-    def sig(z: str) -> str:
-        return f"(0.5 + 0.5 * ({z} / (1.0 + abs({z}))))"
-
-    rounds = []
-    for r in range(1, HLR_ROUNDS + 1):
-        rounds.append(
-            f"z{r} AS MATERIALIZED (SELECT f.doc_id, f.y,"
-            f" SUM(CAST(floor({S} * (w.w * f.f)) AS BIGINT)) AS zm"
-            f" FROM f JOIN w{r - 1} w USING (b) GROUP BY f.doc_id, f.y),\n"
-            f"    e{r} AS MATERIALIZED (SELECT doc_id, ({sig(f'(z{r}.zm / {S})')} - z{r}.y) AS e FROM z{r}),\n"
-            f"    g{r} AS MATERIALIZED (SELECT f.b,"
-            f" SUM(CAST(floor({S} * (e.e * f.f)) AS BIGINT)) AS gs"
-            f" FROM f JOIN e{r} e USING (doc_id) GROUP BY f.b),\n"
-            f"    w{r} AS MATERIALIZED (SELECT w.b, (w.w - {HLR_LR} *"
-            f" (((COALESCE(g.gs, 0) / {S}) / nn.n))) AS w"
-            f" FROM w{r - 1} w LEFT JOIN g{r} g USING (b) CROSS JOIN nn)"
-        )
-    body = ",\n    ".join(rounds)
-    zfin = f"(COALESCE(zf.zm, 0) / {S})"
+    rounds = ",\n    ".join(
+        f"z{r} AS MATERIALIZED (SELECT f.doc_id, f.lang, w.cls,"
+        f" SUM(CAST(floor({S} * (w.w * f.f)) AS BIGINT)) AS zm"
+        f" FROM f JOIN w{r - 1} w USING (b) GROUP BY f.doc_id, f.lang, w.cls),\n"
+        f"    e{r} AS MATERIALIZED (SELECT doc_id, cls, ({_duck_sig(f'(zm / {S})')} -"
+        f" CASE WHEN lang = cls THEN 1.0 ELSE 0.0 END) AS e FROM z{r}),\n"
+        f"    g{r} AS MATERIALIZED (SELECT f.b, e.cls,"
+        f" SUM(CAST(floor({S} * (e.e * f.f)) AS BIGINT)) AS gs"
+        f" FROM f JOIN e{r} e USING (doc_id) GROUP BY f.b, e.cls),\n"
+        f"    w{r} AS MATERIALIZED (SELECT w.b, w.cls, (w.w - {HLR_LR} *"
+        f" (((COALESCE(g.gs, 0) / {S}) / nn.n))) AS w"
+        f" FROM w{r - 1} w LEFT JOIN g{r} g USING (b, cls) CROSS JOIN nn)"
+        for r in range(1, HLR_ROUNDS + 1)
+    )
     return rf"""
     WITH docs0 AS MATERIALIZED (
       SELECT doc_id, lang, {text.DUCK_TOKENS} AS w FROM documents
     ),
-    lab AS MATERIALIZED (
-      SELECT doc_id,
-             CASE WHEN lang = '{HLR_TARGET_LANG}' THEN 1.0 ELSE 0.0 END AS y
-      FROM docs0
-    ),
+    cls AS MATERIALIZED ({classes_sql}),
     grams AS MATERIALIZED (
       SELECT doc_id, unnest(w) AS gram FROM docs0
       UNION ALL
@@ -5053,20 +5027,30 @@ def _hlr_oracle_sql() -> str:
     ),
     ngd AS (SELECT doc_id, SUM(cnt) AS ng FROM fb GROUP BY doc_id),
     f AS MATERIALIZED (
-      SELECT fb.doc_id, fb.b, CAST(fb.cnt AS DOUBLE) / ngd.ng AS f, lab.y
-      FROM fb JOIN ngd USING (doc_id) JOIN lab USING (doc_id)
+      SELECT fb.doc_id, fb.b, CAST(fb.cnt AS DOUBLE) / ngd.ng AS f, docs0.lang
+      FROM fb JOIN ngd USING (doc_id) JOIN docs0 USING (doc_id)
     ),
-    w0 AS MATERIALIZED (SELECT DISTINCT b, 0.0 AS w FROM f),
-    {body},
-    zf AS (
-      SELECT f.doc_id, SUM(CAST(floor({S} * (w.w * f.f)) AS BIGINT)) AS zm
-      FROM f JOIN w{HLR_ROUNDS} w USING (b) GROUP BY f.doc_id
-    )
-    SELECT lab.doc_id,
-           CAST(lab.y AS BIGINT) AS is_target_lang,
-           CAST(floor({S} * {sig(zfin)}) AS BIGINT) AS score_micro,
-           (CAST(floor({S} * {sig(zfin)}) AS BIGINT) > {LOGREG_SCALE // 2}) AS predicted
-    FROM lab LEFT JOIN zf USING (doc_id)
+    w0 AS MATERIALIZED (
+      SELECT b, cls, 0.0 AS w FROM (SELECT DISTINCT b FROM f) CROSS JOIN cls
+    ),
+    {rounds},
+    zf AS MATERIALIZED (
+      SELECT f.doc_id, w.cls, SUM(CAST(floor({S} * (w.w * f.f)) AS BIGINT)) AS zm
+      FROM f JOIN w{HLR_ROUNDS} w USING (b) GROUP BY f.doc_id, w.cls
+    )"""
+
+
+def _hlr_oracle_sql() -> str:
+    """The one-class chain plus its sigmoid tail."""
+    zfin = f"(COALESCE(zf.zm, 0) / {_LR_S})"
+    sm = f"CAST(floor({_LR_S} * {_duck_sig(zfin)}) AS BIGINT)"
+    return _hlr_oracle_prelude(f"SELECT '{HLR_TARGET_LANG}' AS cls") + f"""
+    SELECT d.doc_id,
+           CAST(CASE WHEN d.lang = '{HLR_TARGET_LANG}' THEN 1 ELSE 0 END AS BIGINT)
+             AS is_target_lang,
+           {sm} AS score_micro,
+           ({sm} > {LOGREG_SCALE // 2}) AS predicted
+    FROM docs0 d LEFT JOIN zf USING (doc_id)
     """
 
 
@@ -5080,7 +5064,8 @@ def _hlr_oracle_sql() -> str:
     f" df-capped at 1/{HLR_DF_CAP_DENOM} of docs (the Zipf head carries no"
     f" class signal -- the winnow stop-gram rule), count-normalized, and a"
     f" linear model fit by {HLR_ROUNDS} rounds of full-batch GD against the"
-    f" is-'{HLR_TARGET_LANG}' label. THE DISTRIBUTED-WEIGHTS COMPLEMENT to"
+    f" is-'{HLR_TARGET_LANG}' label -- the one-class case of"
+    f" langid_multiclass's fit. THE DISTRIBUTED-WEIGHTS COMPLEMENT to"
     f" logreg_quality_score: the weight vector is a bucket-keyed DataFrame"
     f" -- gradients are bucket-keyed integer aggregates, updates are"
     f" bucket-keyed joins, and nothing model-sized ever visits the driver,"
@@ -5092,9 +5077,10 @@ def _hlr_oracle_sql() -> str:
     f" rational sigmoid; identical association order both engines. Scale"
     f" shape: one gram census with the BOUNDED hot head broadcast"
     f" anti-joined, one cached (doc,bucket) feature rollup, then per round"
-    f" two broadcast joins + one doc-keyed and one {HLR_BUCKETS}-row"
-    f" bucket-keyed aggregate; weight lineage localCheckpoint-pinned every"
-    f" {_HLR_CHECKPOINT_EVERY} rounds.",
+    f" a broadcast weight join, a sort-merge err join, one doc-keyed and"
+    f" one {HLR_BUCKETS}-row bucket-keyed aggregate, and an update join"
+    f" against the broadcast gradient; the weight frame is lazily"
+    f" localCheckpoint-ed every round.",
 )
 def hashed_ngram_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"))
@@ -5104,79 +5090,11 @@ def hashed_ngram_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- multiclass langid (one-vs-rest in ONE bucket-keyed frame) ---------------
 
 
-def _hlm_fit_full(
-    d: DataFrame,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, int]:
-    """Fit the MULTICLASS hashed-gram langid -- the real fastText langid
-    shape: one one-vs-rest linear model per language, all |langs| weight
-    columns living in the SAME bucket-keyed frame keyed (b, cls).
-
-    The algebra is the binary fit's verbatim with one extra key column:
-    z becomes a (doc, cls)-keyed aggregate, gradients a (b, cls)-keyed
-    aggregate, the update a (b, cls)-keyed join -- so the 100 TB posture is
-    unchanged (nothing model-sized visits the driver; the weight frame is
-    <= HLR_BUCKETS * |langs| rows, broadcastable at langid scale and
-    shuffle-joinable at fastText's 2M-bucket space). Returns (weights, hot,
-    feats, labels, classes, n); feats/labels/classes cached."""
-    labels = _cached(d.select("doc_id", "lang"))
-    n = labels.count()
-    feats0, hot = _hlr_kept_feats(d, n)
-    feats = _cached(feats0)
-    classes = _cached(labels.select(F.col("lang").alias("cls")).distinct())
-    k = classes.count()  # |langs| -- bounds the weight space at buckets*k
-    scale = float(LOGREG_SCALE)
-    weights = (
-        feats.select("b")
-        .distinct()
-        .crossJoin(F.broadcast(classes))
-        .select("b", "cls", F.lit(0.0).alias("w"))
-    )
-    for r in range(HLR_ROUNDS):
-        z = (
-            feats.join(_hlr_wside(weights, HLR_BUCKETS * k), "b")
-            .select(
-                "doc_id",
-                "cls",
-                F.floor(F.lit(scale) * (F.col("w") * F.col("f"))).alias("t"),
-            )
-            .groupBy("doc_id", "cls")
-            .agg(F.sum("t").alias("zm"))
-        )
-        err = z.join(_corpus_side(labels), "doc_id").select(
-            "doc_id",
-            "cls",
-            (
-                _lr_sig(F.col("zm") / F.lit(scale))
-                - F.when(F.col("lang") == F.col("cls"), F.lit(1.0)).otherwise(F.lit(0.0))
-            ).alias("e"),
-        )
-        g = (
-            feats.join(_corpus_side(err), "doc_id")
-            .select(
-                "b", "cls", F.floor(F.lit(scale) * (F.col("e") * F.col("f"))).alias("t")
-            )
-            .groupBy("b", "cls")
-            .agg(F.sum("t").alias("gs"))
-        )
-        weights = weights.join(g, ["b", "cls"], "left").select(
-            "b",
-            "cls",
-            (
-                F.col("w")
-                - F.lit(HLR_LR)
-                * ((F.coalesce(F.col("gs"), F.lit(0)) / F.lit(scale)) / F.lit(n))
-            ).alias("w"),
-        )
-        if r % _HLR_CHECKPOINT_EVERY == _HLR_CHECKPOINT_EVERY - 1:
-            weights = weights.localCheckpoint()
-    return weights, hot, feats, labels, classes, n
-
-
 def hashed_langid_multiclass_fit(d: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Public multiclass fit surface: the model is ((b, cls, w), hot) --
-    persist with models.save_langid_model(classes=True), serve with
-    hashed_langid_multiclass_score."""
-    weights, hot, _f, _l, _c, _n = _hlm_fit_full(d)
+    """Public multiclass fit surface: the model is ((b, cls, w), hot) with
+    one class per distinct lang -- persist with models.save_langid_model,
+    serve with hashed_langid_multiclass_score."""
+    weights, hot, _feats = _hlr_fit(d, None)
     return weights, hot
 
 
@@ -5186,28 +5104,16 @@ def hashed_langid_multiclass_score(
     hot: DataFrame,
     feats: DataFrame | None = None,
 ) -> DataFrame:
-    """argmax serving over a trained one-vs-rest frame: per-doc features
-    (row-local given the broadcast hot list), one broadcast join with the
-    (b, cls) weights, one (doc, cls)-keyed exact-integer aggregate, then
-    the argmax window. Deterministic: zm is an exact BIGINT, ties break on
-    cls ascending -- identical on any engine. A doc with no kept grams
-    scores 0 for every class and predicts the lexicographically first one
-    (the defined cold-doc fallback)."""
+    """argmax serving over a trained one-vs-rest frame: row-local features
+    given the broadcast hot list, the (doc, cls)-keyed score aggregate,
+    then the argmax window. Deterministic: zm is an exact BIGINT, ties
+    break on cls ascending -- identical on any engine. A doc with no kept
+    grams scores 0 for every class and predicts the lexicographically
+    first one (the defined cold-doc fallback)."""
     from pyspark.sql.window import Window
 
-    scale = float(LOGREG_SCALE)
     classes = weights.select("cls").distinct()
-    k = classes.count()
-    if feats is None:
-        feats, _hot = _hlr_kept_feats_from_hot(d, hot)
-    zf = (
-        feats.join(_hlr_wside(weights, HLR_BUCKETS * k), "b")
-        .select(
-            "doc_id", "cls", F.floor(F.lit(scale) * (F.col("w") * F.col("f"))).alias("t")
-        )
-        .groupBy("doc_id", "cls")
-        .agg(F.sum("t").alias("zm"))
-    )
+    zf = _hlr_z(_hlr_feats(d, hot) if feats is None else feats, weights, classes.count())
     full = (
         d.select("doc_id")
         .crossJoin(F.broadcast(classes))
@@ -5224,31 +5130,16 @@ def hashed_langid_multiclass_score(
     )
 
 
-def _hlr_kept_feats_from_hot(d: DataFrame, hot: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Serving-side featurization: same rollup as _hlr_kept_feats but the
-    hot list is the TRAINED model's, not re-derived from serving traffic
-    (a reloaded model must featurize exactly as the fit did)."""
-    grams = hashed_gram_frame(d)
-    kept = grams.join(F.broadcast(hot), "gram", "left_anti")
-    fb = kept.groupBy("doc_id", _hlr_bucket(F.col("gram")).alias("b")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    ngd = fb.groupBy("doc_id").agg(F.sum("cnt").alias("ng"))
-    feats = fb.join(ngd, "doc_id").select(
-        "doc_id", "b", (F.col("cnt").cast("double") / F.col("ng")).alias("f")
-    )
-    return feats, hot
-
-
 def hashed_langid_multiclass_frame(d: DataFrame) -> DataFrame:
     """Fit + predict every doc, emit the |langs|^2-bounded confusion rollup
     (true lang x predicted lang x doc count) -- the readout a langid
     evaluation reads (fastText's test command prints exactly this matrix's
     diagonal mass)."""
-    weights, hot, feats, labels, _classes, _n = _hlm_fit_full(d)
+    weights, hot, feats = _hlr_fit(d, None)
     pred = hashed_langid_multiclass_score(d, weights, hot, feats=feats)
     return (
-        labels.join(_corpus_side(pred), "doc_id")
+        d.select("doc_id", "lang")  # the fit's cached label frame
+        .join(_corpus_side(pred), "doc_id")
         .groupBy("lang", "predicted")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .orderBy("lang", "predicted")
@@ -5256,78 +5147,11 @@ def hashed_langid_multiclass_frame(d: DataFrame) -> DataFrame:
 
 
 def _hlm_oracle_sql() -> str:
-    """DuckDB mirror of the multiclass fit: the binary oracle's CTE chain
-    with the cls key threaded through every round (materialized -- each
-    w_r feeds two consumers and would otherwise inline exponentially)."""
-    from flink_cdc_fluss_quickstart_spark.plans.pipeline_queries import _duck_hex
-
-    S = _LR_S
-    hx = _duck_hex("md5('hg|' || gram)")
-    bucket = f"({hx} % {HLR_BUCKETS})"
-
-    def sig(z: str) -> str:
-        return f"(0.5 + 0.5 * ({z} / (1.0 + abs({z}))))"
-
-    rounds = []
-    for r in range(1, HLR_ROUNDS + 1):
-        rounds.append(
-            f"z{r} AS MATERIALIZED (SELECT f.doc_id, w.cls,"
-            f" SUM(CAST(floor({S} * (w.w * f.f)) AS BIGINT)) AS zm"
-            f" FROM f JOIN w{r - 1} w USING (b) GROUP BY f.doc_id, w.cls),\n"
-            f"    e{r} AS MATERIALIZED (SELECT z.doc_id, z.cls,"
-            f" ({sig(f'(z.zm / {S})')} -"
-            f" CASE WHEN l.lang = z.cls THEN 1.0 ELSE 0.0 END) AS e"
-            f" FROM z{r} z JOIN lab l USING (doc_id)),\n"
-            f"    g{r} AS MATERIALIZED (SELECT f.b, e.cls,"
-            f" SUM(CAST(floor({S} * (e.e * f.f)) AS BIGINT)) AS gs"
-            f" FROM f JOIN e{r} e USING (doc_id) GROUP BY f.b, e.cls),\n"
-            f"    w{r} AS MATERIALIZED (SELECT w.b, w.cls, (w.w - {HLR_LR} *"
-            f" (((COALESCE(g.gs, 0) / {S}) / nn.n))) AS w"
-            f" FROM w{r - 1} w LEFT JOIN g{r} g USING (b, cls) CROSS JOIN nn)"
-        )
-    body = ",\n    ".join(rounds)
-    return rf"""
-    WITH docs0 AS MATERIALIZED (
-      SELECT doc_id, lang, {text.DUCK_TOKENS} AS w FROM documents
-    ),
-    lab AS MATERIALIZED (SELECT doc_id, lang FROM docs0),
-    cls AS MATERIALIZED (SELECT DISTINCT lang AS cls FROM docs0),
-    grams AS MATERIALIZED (
-      SELECT doc_id, unnest(w) AS gram FROM docs0
-      UNION ALL
-      SELECT doc_id,
-             unnest(list_transform(range(1, len(w)),
-                                   i -> w[i] || ' ' || w[i + 1])) AS gram
-      FROM docs0 WHERE len(w) >= 2
-    ),
-    nn AS (SELECT COUNT(*) AS n FROM docs0),
-    census AS (
-      SELECT gram, COUNT(DISTINCT doc_id) AS df FROM grams GROUP BY gram
-    ),
-    kept AS (
-      SELECT g.doc_id, g.gram
-      FROM grams g JOIN census c USING (gram) CROSS JOIN nn
-      WHERE c.df <= GREATEST(nn.n // {HLR_DF_CAP_DENOM}, 1)
-    ),
-    fb AS (
-      SELECT doc_id, {bucket} AS b, COUNT(*) AS cnt FROM kept GROUP BY 1, 2
-    ),
-    ngd AS (SELECT doc_id, SUM(cnt) AS ng FROM fb GROUP BY doc_id),
-    f AS MATERIALIZED (
-      SELECT fb.doc_id, fb.b, CAST(fb.cnt AS DOUBLE) / ngd.ng AS f
-      FROM fb JOIN ngd USING (doc_id)
-    ),
-    w0 AS MATERIALIZED (
-      SELECT b, cls, 0.0 AS w FROM (SELECT DISTINCT b FROM f) CROSS JOIN cls
-    ),
-    {body},
-    zf AS MATERIALIZED (
-      SELECT f.doc_id, w.cls, SUM(CAST(floor({S} * (w.w * f.f)) AS BIGINT)) AS zm
-      FROM f JOIN w{HLR_ROUNDS} w USING (b) GROUP BY f.doc_id, w.cls
-    ),
+    """The k-class chain plus its argmax tail."""
+    return _hlr_oracle_prelude("SELECT DISTINCT lang AS cls FROM docs0") + """,
     fullz AS (
       SELECT l.doc_id, l.lang, c.cls, COALESCE(zf.zm, 0) AS zm
-      FROM lab l CROSS JOIN cls c
+      FROM docs0 l CROSS JOIN cls c
       LEFT JOIN zf ON zf.doc_id = l.doc_id AND zf.cls = c.cls
     ),
     pred AS (
@@ -5348,7 +5172,7 @@ def _hlm_oracle_sql() -> str:
     f" full fastText langid shape (Joulin et al. 2016): one one-vs-rest"
     f" linear model per language, all of them living in ONE bucket-keyed"
     f" weight frame keyed (bucket, class). The binary"
-    f" hashed_ngram_langid's algebra with one extra key column: per GD"
+    f" hashed_ngram_langid is the same fit with one class: per GD"
     f" round z is a (doc, class)-keyed exact-integer aggregate, the"
     f" gradient a (bucket, class)-keyed one, the update a (bucket,"
     f" class)-keyed join -- nothing model-sized visits the driver, so the"
@@ -5359,8 +5183,8 @@ def _hlm_oracle_sql() -> str:
     f" defined cold-doc fallback). Output is the |langs|^2-bounded"
     f" confusion rollup. Same determinism contract as the whole trained"
     f" family: floor-scaled BIGINT sums, rational sigmoid, identical"
-    f" association order; weight lineage localCheckpoint-pinned every"
-    f" {_HLR_CHECKPOINT_EVERY} rounds.",
+    f" association order; the weight frame is lazily localCheckpoint-ed"
+    f" every round.",
 )
 def langid_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"))

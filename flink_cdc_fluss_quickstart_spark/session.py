@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Tuned for local[32] testing; on a real cluster spark-submit conf wins:
 # get_spark applies each of these ONLY when the key was not passed via
@@ -154,6 +154,29 @@ def get_spark(app_name: str = "flink-cdc-fluss-quickstart-spark",
     spark = builder.getOrCreate()
     _configure_state_store(spark)
     return spark
+
+
+def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s plan as a DataFrame of ``spark``, a session over the same
+    SparkContext. The cache is shared, so persisted subtrees keep reading
+    their cached data."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(  # type: ignore[union-attr]
+        spark._jsparkSession, df._jdf.queryExecution().logical()
+    )
+    return DataFrame(jdf, spark)
+
+
+def loop_frame(df: DataFrame, conf: dict[str, str]) -> DataFrame:
+    """``df`` rebound to a child session that carries ``conf`` on top of a
+    clone of df's session conf (same SparkContext and cache). Frames
+    derived from the result plan and run under the loop's settings, while
+    the caller's session -- and any query running on it concurrently --
+    never sees them. Hand results back to the caller with ``rebind``."""
+    parent = df.sparkSession
+    child = SparkSession(parent.sparkContext, parent._jsparkSession.cloneSession())
+    for k, v in conf.items():
+        child.conf.set(k, v)
+    return rebind(df, child)
 
 
 _ROCKSDB_PROVIDER = (

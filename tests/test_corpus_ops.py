@@ -9,6 +9,7 @@ registered query calls (span_dedup_frame / nb_score_frame / novelty_frame)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from flink_cdc_fluss_quickstart_spark.plans import text_queries as tq
 
@@ -1202,6 +1203,76 @@ def test_bpe_learn_loop_is_one_job_per_round(spark):
     assert n_jobs <= n_merges + 7, (
         f"bpe learn loop ran {n_jobs} jobs for {n_merges} merges -- "
         "the one-job-per-round discipline regressed"
+    )
+
+
+def test_loops_never_write_the_callers_session_conf(spark, sf_dir, monkeypatch):
+    """The logreg fit and the BPE merge loop run their AQE-off / shuffle
+    width settings in a child session: while either runs, the caller's
+    session conf is never written (a concurrent query on that session would
+    otherwise plan under the loop's settings), and the frames handed back
+    stay bound to the caller's session."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from flink_cdc_fluss_quickstart_spark.tables import load_table, spread
+
+    d = spread(load_table(spark, sf_dir, "documents"))
+    target = spark.conf._jconf
+    writes = []
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def spy_set(self, key, value):
+        if self._jconf.equals(target):
+            writes.append(key)
+        return real_set(self, key, value)
+
+    def spy_unset(self, key):
+        if self._jconf.equals(target):
+            writes.append(key)
+        return real_unset(self, key)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy_set)
+    monkeypatch.setattr(RuntimeConfig, "unset", spy_unset)
+    _, std = tq._logreg_fit_full(d)
+    vocab = _docs(spark, [(1, "abab abba baab")]).select(
+        F.explode(F.split("text", " ")).alias("tok"), F.lit(1).alias("c")
+    ).select("tok", "c", F.array_join(F.split("tok", ""), tq._BPE_SEP).alias("sym"))
+    enc, merges = tq.bpe_learn_merges(vocab, 2)
+    assert len(merges) == 2
+    assert writes == []
+    assert std.sparkSession is spark and enc.sparkSession is spark
+
+
+def _three_lang_corpus(spark):
+    rows = []
+    for li, lang in enumerate(("en", "de", "fr")):
+        for i in range(15):
+            mk = [f"{lang}mark{(i + k) % 8}" for k in range(3)]
+            rows.append(
+                (li * 100 + i, " ".join(["filler common soup word"] * 3 + mk * 4), lang)
+            )
+    return spark.createDataFrame(rows, "doc_id bigint, text string, lang string")
+
+
+@pytest.mark.parametrize("fit", ["hashed_langid_fit", "hashed_langid_multiclass_fit"])
+def test_langid_fit_is_at_most_ten_jobs_per_gd_round(spark, fit):
+    """Loop-discipline guard for the one langid GD loop: a fit, including
+    the job that collects its weights, stays within 10 jobs per round on
+    the planted three-language corpus (measured 67-79 for 10 rounds, both
+    fits). The lazy per-round weight checkpoint keeps it there; an eager
+    pin every 3 rounds runs 145-216."""
+    d = _three_lang_corpus(spark)
+    sc = spark.sparkContext
+    group = f"langid-fit-job-guard-{fit}"
+    sc.setJobGroup(group, group)
+    try:
+        weights, _hot = getattr(tq, fit)(d)
+        weights.collect()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n_jobs <= 10 * tq.HLR_ROUNDS, (
+        f"{fit} ran {n_jobs} jobs for {tq.HLR_ROUNDS} rounds"
     )
 
 

@@ -255,7 +255,7 @@ def test_multiclass_langid_model_roundtrip(spark, tmp_path):
     d = spark.createDataFrame(rows, "doc_id bigint, text string, lang string")
     weights, hot = tq.hashed_langid_multiclass_fit(d)
     mpath = str(tmp_path / "mc_model")
-    models.save_langid_model(spark, mpath, weights, hot, classes=True)
+    models.save_langid_model(spark, mpath, weights, hot)
 
     serve = spark.createDataFrame(
         [(900, "filler enmark1 enmark4 common"), (901, "demark0 demark2 soup"),
